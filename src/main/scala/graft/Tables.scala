@@ -54,7 +54,15 @@ object Tables {
   }
 }
 
-/** Session factory with the engine's standard config. */
+/** Session factory with the engine's standard config.
+  *
+  * `spark.sql.codegen.cache.maxEntries` is a JVM-wide static conf: Spark
+  * reads it once, when the first session in the JVM generates code, and
+  * sizes the one generated-class cache every later session shares. A
+  * consumer that builds its own session must set it on that first
+  * session, or warm executions of the same queries recompile their
+  * generated classes (and the JIT recompiles those in turn).
+  */
 object GraftSession {
   def builder(cpus: Int): SparkSession.Builder = {
     val b = SparkSession.builder()
@@ -67,6 +75,15 @@ object GraftSession {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .config("spark.kryo.registrator", "graft.core.GraftKryoRegistrator")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // Generated-class cache. Spark's default of 100 is a Guava LRU cache
+      // split into 4 segments of 25. One pass of a 7-row battery mix (one
+      // row per family) fills ~120 entries, always in the same cyclic
+      // order, so at 100 each class is evicted just before it is needed
+      // again and a warm pass recompiles ~90-110 of them. 1000 (4 x 250)
+      // holds one pass of a long-lived workload with room for uneven
+      // hashing across segments. It is not sized for the whole battery,
+      // which runs each row once: one sf0.01 Verify run fills 3,663.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
     // SPARK_GRAFT_EXTRA_CONF="k=v;k=v": measurement hook for A/B-ing a
     // session conf across otherwise-identical runs (e.g. the state-store
     // maintenance-interval experiment in the bench-variance root cause);

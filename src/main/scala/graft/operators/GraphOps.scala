@@ -625,10 +625,14 @@ object GraphOps {
       s"$what did not converge within $maxRounds rounds — the input " +
         "has a cycle or depth > 2^" + (maxRounds - 1))
     // dangling-parent audit: every settled ancestor must be a real root
-    // row, else the chain silently terminated at a key with no node
+    // row, else the chain silently terminated at a key with no node. A
+    // plain count, not limit(1): on valid input there is no row to stop
+    // at, and Spark names each planned LIMIT's generated counter field
+    // from a JVM-global sequence, so a limit would compile fresh classes
+    // on every call instead of reusing cached ones
     val dangling = f.join(
       roots.select(col("node").as("anc")), Seq("anc"), "left_anti")
-      .limit(1).count()
+      .count()
     require(dangling == 0,
       s"$what input has a dangling parent: some chain ends at a key " +
         "with no (node, parent) row — results would be silently wrong")
