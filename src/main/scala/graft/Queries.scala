@@ -758,14 +758,19 @@ object Queries {
       .agg(expr("CAST(COUNT(*) AS BIGINT)").as("n"),
         expr("CAST(graft_money_sum(c_acctbal, 2) AS DOUBLE)").as("sum_bal"))
 
-  /** Custom whole-operator plan: per-key top-k via partial/final
-    * TopKPerKeyExec (graft.plans) — the scale-safe form of q09's
-    * window-rank pattern.
+  /** Per-key top-k through the row_number-filter idiom: Spark's
+    * `InsertWindowGroupLimit` plans it as a partial `WindowGroupLimit`
+    * before the exchange and a final one after it, so at most k rows per
+    * key per partition are shuffled.
     */
-  def d39TopkPerKey(s: SparkSession, d: String): DataFrame =
-    graft.plans.TopKPerKey(
-      Tables.orders(s, d).select("o_custkey", "o_orderkey", "o_totalprice"),
-      Seq("o_custkey"), Seq(("o_totalprice", false), ("o_orderkey", true)), k = 3)
+  def d39TopkPerKey(s: SparkSession, d: String): DataFrame = {
+    val w = Window.partitionBy(col("o_custkey"))
+      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
+    Tables.orders(s, d)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3)
+      .select("o_custkey", "o_orderkey", "o_totalprice")
+  }
 
   /** Benchmark decontamination: training docs sharing >= 3 verbatim
     * 8-grams with the eval slice (sources src0/src1). Eval grams broadcast;
@@ -839,7 +844,7 @@ object Queries {
 
   /** TF-IDF top-3 terms per document: two-level aggregation (term
     * frequencies, then document frequencies), broadcast idf join, and a
-    * per-doc top-k that the WindowRankToTopK rule pre-prunes. Rank compares
+    * per-doc top-k that Spark's `WindowGroupLimit` pre-prunes. Rank compares
     * the ROUNDED score (then term) so the ordering is engine-portable.
     */
   def d61TfIdf(s: SparkSession, d: String): DataFrame = {
@@ -1613,7 +1618,7 @@ object Queries {
     * exact integers into two correctly-rounded IEEE ops (sqrt, divide),
     * so the raw doubles hash cross-engine and rank deterministically
     * (partner id breaks ties). The per-item top-3 is the
-    * row_number-filter idiom, pre-pruned by the WindowRankToTopK rule
+    * row_number-filter idiom, pre-pruned by Spark's `WindowGroupLimit`
     * before its shuffle.
     */
   def d197ItemSimilarity(s: SparkSession, d: String): DataFrame =

@@ -436,8 +436,8 @@ object GraphOps {
     * idiom (one group shuffle, in-group expansion); item counts are an
     * item-hash aggregate joined back by item (item-sized, shuffled not
     * broadcast by assumption); the top-k window partitions by item —
-    * and because it is the row_number-filter idiom, the
-    * `WindowRankToTopK` rule pre-prunes each partition to k before the
+    * and because it is the row_number-filter idiom, Spark's
+    * `WindowGroupLimit` pre-prunes each partition to k before the
     * window's shuffle.
     *
     * Output: (item, partner, pair_cnt, item_cnt, partner_cnt, sim, rank)

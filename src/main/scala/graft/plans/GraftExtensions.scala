@@ -26,6 +26,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - graft_char_entropy(text)                         → double
   *  - graft_jaro_winkler(text, text)                   → double
   *  - graft_money_sum(x, scale)  [aggregate]           → decimal(38,scale)
+  *
+  * Functions only: no optimizer rule or planner strategy. The per-key
+  * top-k idiom (`row_number()` over a partition, filtered to `<= k`) is
+  * planned by Spark's own `InsertWindowGroupLimit`, which prunes each
+  * partition to k rows per key before the shuffle (for k up to
+  * `spark.sql.optimizer.windowGroupLimitThreshold`, 1000 by default).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -41,10 +47,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, name)
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // whole-operator custom plan: TopKPerKeyNode → partial/final TopKPerKeyExec
-    ext.injectPlannerStrategy(_ => new TopKStrategy)
-    // optimizer rule: window-rank top-k idiom → TopKPerKeyNode pre-pruning
-    ext.injectOptimizerRule(_ => new WindowRankToTopK)
     ext.injectFunction((FunctionIdentifier("graft_minhash"), info("graft_minhash"),
       (args: Seq[Expression]) =>
         MinHashSignatureExpr(args.head, intLit(args(1), "numHashes"), 42L)))

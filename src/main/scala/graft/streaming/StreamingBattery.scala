@@ -554,6 +554,22 @@ object StreamingBattery {
     } finally deleteRecursively(root)
   }
 
+  /** Whether some (user_id, event_type, hr) key of `ev` has events of
+    * both event-id parities, i.e. straddles d146's two halves. Existence
+    * needs one aggregation (key → parity spread) and its first row, not a
+    * count of every straddling key. `take(1)` plans a `CollectLimitExec`,
+    * whose generated code is the same on every call; a codegen
+    * `limit(1).count()` names its `_limit_counter_N` field from a
+    * JVM-global sequence and compiles new classes on each call.
+    */
+  private[graft] def anyKeyStraddlesParity(ev: DataFrame): Boolean =
+    ev.select(col("user_id"), col("event_type"), col("hr"),
+        (col("event_id") % 2).as("__par"))
+      .groupBy(col("user_id"), col("event_type"), col("hr"))
+      .agg(min(col("__par")).as("__mn"), max(col("__par")).as("__mx"))
+      .filter(col("__mn") === 0 && col("__mx") === 1)
+      .take(1).nonEmpty
+
   /** Streaming checkpoint-RESUME, oracle-gated: the one property a standing
     * 100 TB ingest pipeline lives on and no other row exercises — a
     * restarted query must pick up exactly where the checkpoint left off,
@@ -583,18 +599,7 @@ object StreamingBattery {
         col("event_type"), expr("ts_ms div 3600000").as("hr"))
       // keys present in BOTH halves: without them run 2 never tests state
       // recovery (every B key would be new) and the row passes vacuously.
-      // r9 optimization (guide §2.4): the former two-distinct + intersect
-      // formulation shuffled the key projection three times and counted
-      // every straddling key; the require only needs EXISTENCE, which one
-      // aggregation (key → parity spread) answers under a limit(1).
-      val straddle = ev
-        .select(col("user_id"), col("event_type"), col("hr"),
-          (col("event_id") % 2).as("__par"))
-        .groupBy(col("user_id"), col("event_type"), col("hr"))
-        .agg(min(col("__par")).as("__mn"), max(col("__par")).as("__mx"))
-        .filter(col("__mn") === 0 && col("__mx") === 1)
-        .limit(1).count()
-      require(straddle > 0,
+      require(anyKeyStraddlesParity(ev),
         "no dedup key straddles the two halves: resume would be untested")
       ev.filter(col("event_id") % 2 === 0).drop("event_id")
         .write.parquet(in.toString)

@@ -13,14 +13,6 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** DataFrame from a raw LogicalPlan (classic `Dataset.ofRows` is
-    * `private[sql]`) — needed to surface custom logical operators.
-    */
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
   /** `AbstractDataType`/`TypeCollection` are `private[sql]`; expressions in
     * graft.plans declare `ExpectsInputTypes` contracts through these
     * aliases.

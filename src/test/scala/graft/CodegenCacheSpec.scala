@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.GraphOps
+import graft.streaming.StreamingBattery
 import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Warm executions reuse generated code: the codegen cache that
@@ -43,6 +44,18 @@ class CodegenCacheSpec extends SparkTestBase {
     assert(depthSum() == want)
     val c0 = compiles
     assert(depthSum() == want)
+    assert(compiles - c0 == 0, s"second call compiled ${compiles - c0} classes")
+  }
+
+  test("d146's straddle check generates the same code on every call") {
+    // key (user_id, event_type, hr) repeats every 195 ids, an odd stride,
+    // so every key has events of both parities
+    val ev = spark.range(400).selectExpr("id AS event_id", "id % 13 AS user_id",
+      "CAST(id % 3 AS STRING) AS event_type", "id % 5 AS hr")
+    assert(StreamingBattery.anyKeyStraddlesParity(ev))
+    assert(!StreamingBattery.anyKeyStraddlesParity(ev.filter("event_id % 2 = 0")))
+    val c0 = compiles
+    assert(StreamingBattery.anyKeyStraddlesParity(ev))
     assert(compiles - c0 == 0, s"second call compiled ${compiles - c0} classes")
   }
 }

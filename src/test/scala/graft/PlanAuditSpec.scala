@@ -54,15 +54,26 @@ class PlanAuditSpec extends SparkTestBase {
     assert(plan.contains("*("), "aggregation fell out of codegen:\n" + plan.take(2000))
   }
 
-  test("q09: window-rank idiom rewrites onto partial/final TopKPerKey pre-pruning") {
-    val plan = planOf(Queries.q09WindowRank(spark, d))
-    assert("TopKPerKey \\d".r.findAllIn(plan.split("== Initial Plan ==").head).size == 2,
-      plan.take(2000))
+  /** The row_number-filter top-k idiom prunes before it shuffles: Spark's
+    * `InsertWindowGroupLimit` puts a partial `WindowGroupLimit` below the
+    * window's hash exchange (tree lines print parents first, so "below"
+    * is a later line).
+    */
+  private def assertPartialGroupLimitBelowExchange(df: DataFrame): Unit = {
+    val lines = planOf(df).split("== Initial Plan ==").head.linesIterator.toIndexedSeq
+    val partial = lines.lastIndexWhere(l => l.contains("WindowGroupLimit") && l.contains("Partial"))
+    val exchange = lines.indexWhere(_.contains("Exchange hashpartitioning"))
+    assert(partial >= 0 && exchange >= 0 && exchange < partial,
+      "no partial WindowGroupLimit below the hash exchange:\n" + lines.mkString("\n").take(3000))
+  }
+
+  test("q09/d39: per-customer top-3 pre-prunes via a partial WindowGroupLimit") {
+    assertPartialGroupLimitBelowExchange(Queries.q09WindowRank(spark, d))
+    assertPartialGroupLimitBelowExchange(Queries.d39TopkPerKey(spark, d))
   }
 
   test("d22: exact dedup (rank=1 policy) pre-prunes before its shuffle too") {
-    val plan = planOf(Queries.d22DedupSurvivors(spark, d))
-    assert(plan.contains("TopKPerKey"), plan.take(2000))
+    assertPartialGroupLimitBelowExchange(Queries.d22DedupSurvivors(spark, d))
   }
 
   test("d26: brute-force ANN broadcasts the query side (no corpus shuffle)") {
@@ -513,10 +524,8 @@ class PlanAuditSpec extends SparkTestBase {
         "would serialize the frame:\n" + windows.mkString("\n"))
   }
 
-  test("d197: the per-item top-3 pre-prunes via TopKPerKey before its window shuffle") {
-    val plan = planOf(Queries.d197ItemSimilarity(spark, d))
-    assert(plan.contains("TopKPerKey"),
-      "row_number-filter idiom no longer rewritten:\n" + plan.take(2000))
+  test("d197: per-item top-3 pre-prunes via a partial WindowGroupLimit") {
+    assertPartialGroupLimitBelowExchange(Queries.d197ItemSimilarity(spark, d))
   }
 
   test("d198: global top-50 plans TakeOrdered, never a global sort exchange") {
