@@ -3,49 +3,11 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Deterministic hashing primitives for dedup at scale, built on Spark's
-  * native `xxhash64` (codegen'd) so signatures are identical across runs and
-  * cluster sizes — a hard requirement for incremental dedup over 100 TB.
+/** Set-similarity scores over array columns as plain Column expressions.
+  * The hashing kernels themselves (MinHash and SimHash signatures, LSH band
+  * keys) are codegen'd expressions in [[graft.plans.NativeExpressions]].
   */
 object Hashing {
-
-  /** One xxhash64 per element — the only string hashing MinHash/SimHash
-    * need; all per-slot/per-bit derivation happens on these longs.
-    * Materialize this as its own column (separate projection) before fanning
-    * out so the string hash isn't re-evaluated per slot.
-    */
-  def elementHashes(set: Column): Column = transform(set, e => xxhash64(e))
-
-  /** MinHash signature of a string-array column: `numHashes` independent
-    * permutations; each slot is the min over the set of a re-mix of the
-    * per-element hash (hash each STRING once, then `numHashes` cheap
-    * long-rehashes — not `numHashes` string hashes). Returns array<bigint>.
-    * Pure Column expression — no UDF, no shuffle.
-    */
-  def minHashSignature(set: Column, numHashes: Int): Column =
-    minHashFromHashes(elementHashes(set), numHashes)
-
-  /** Signature from precomputed element hashes (see [[elementHashes]]). */
-  def minHashFromHashes(hashes: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { seed =>
-      // per-slot min over re-mixed element hashes; empty sets → Long.MaxValue
-      coalesce(
-        array_min(transform(hashes, h => xxhash64(h, lit(seed)))),
-        lit(Long.MaxValue))
-    }: _*)
-
-  /** LSH band keys for a MinHash signature: split into `bands` bands of
-    * `rowsPerBand` and hash each band to one bucket key. Two docs sharing any
-    * band bucket are near-dup candidates (standard banding: collision prob
-    * 1-(1-s^r)^b for Jaccard s).
-    */
-  def lshBandKeys(signature: Column, bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      struct(
-        lit(b).as("band"),
-        xxhash64(concat_ws(",",
-          slice(signature, b * rowsPerBand + 1, rowsPerBand)), lit(b)).as("bucket"))
-    }: _*)
 
   /** Estimated Jaccard similarity from two MinHash signatures: fraction of
     * matching slots.
@@ -60,34 +22,4 @@ object Hashing {
     val uni = size(array_union(a, b)).cast("double")
     when(uni > 0, inter / uni).otherwise(lit(0.0))
   }
-
-  /** 64-bit SimHash over a token-array column: per token, xxhash64 spreads
-    * into 64 bits; each bit votes +1/-1; the sign of each bit-sum forms the
-    * fingerprint. Hamming-close simhashes = near-dup docs. Pure expression:
-    * builds the 64 bit-sums with `aggregate` over a 64-slot array.
-    */
-  def simHash(tokensCol: Column): Column = simHashFromHashes(elementHashes(tokensCol))
-
-  /** SimHash from precomputed element hashes: each element contributes one
-    * precomputed long; its 64 bits vote via shifts (no re-hashing per bit).
-    */
-  def simHashFromHashes(hashes: Column): Column = {
-    // acc: array of 64 counters; per element hash h add +1/-1 per bit of h
-    val votes = aggregate(
-      hashes,
-      array_repeat(lit(0L), 64),
-      (acc, h) =>
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (a, i) => a + when(call_function("shiftright", h, i).bitwiseAND(1) === 1, 1L)
-            .otherwise(-1L)))
-    // fold sign bits into one long
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(63)),
-        (v, i) => when(v > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
-  /** Hamming distance between two 64-bit fingerprints. */
-  def hammingDistance64(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 }

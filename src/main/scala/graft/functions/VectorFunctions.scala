@@ -1,43 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Dense-vector math over `array<float>` embedding columns using native
-  * higher-order functions (`zip_with`/`aggregate`) — codegen'd, no UDF, so
-  * similarity scans stay inside WholeStageCodegen at any scale.
+/** Aggregation over `array<double>` embedding columns. Per-row vector math
+  * (dot product, cosine, LSH buckets) is codegen'd in
+  * [[graft.plans.NativeExpressions]].
   */
 object VectorFunctions {
-
-  /** Dot product of two array<numeric> columns (double result). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** L2 norm. */
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity; 0.0 for zero vectors. */
-  def cosine(a: Column, b: Column): Column = {
-    val denom = norm(a) * norm(b)
-    when(denom > 0, dot(a, b) / denom).otherwise(lit(0.0))
-  }
-
-  /** Squared euclidean distance. */
-  def l2Sq(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => {
-      val d = x.cast("double") - y.cast("double"); d * d
-    }), lit(0.0), (acc, v) => acc + v)
-
-  /** Pre-normalized copy of a vector (array<double>); pre-normalizing the
-    * corpus once turns every cosine into a dot product — the right trade at
-    * 100 TB where the corpus side is scanned repeatedly.
-    */
-  def normalized(a: Column): Column = {
-    val n = norm(a)
-    when(n > 0, transform(a, x => x.cast("double") / n))
-      .otherwise(transform(a, x => x.cast("double")))
-  }
 
   /** Dimension-wise mean of an `array<double>` column as a typed
     * `Aggregator` — THE way to aggregate vectors at corpus scale: the
@@ -86,23 +55,4 @@ object VectorFunctions {
   lazy val vectorAvg: org.apache.spark.sql.expressions.UserDefinedFunction =
     udaf(new VectorAvgAgg,
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]())
-
-  /** Deterministic random-hyperplane LSH bit-signature for cosine similarity:
-    * `bits` hyperplanes are derived from xxhash64(seed, dim-index) — no
-    * stored model needed, any executor regenerates the same planes. Returns
-    * a bigint bucket key. Collisions preserve angular proximity.
-    */
-  def cosineLshBucket(vec: Column, bits: Int, seed: Int = 42): Column = {
-    require(bits <= 63, "bucket key is a single long")
-    val bitCols = (0 until bits).map { p =>
-      // pseudo-random +-1 plane component per (plane, dim) from a hash
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => when(xxhash64(lit(s"plane$p"), i, lit(seed)).bitwiseAND(1) === 1,
-            x.cast("double")).otherwise(-x.cast("double"))),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bitCols.reduce((a, b) => a.bitwiseOR(b))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.functions.{Hashing, TextFunctions, VectorFunctions}
+import graft.functions.{Hashing, TextFunctions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

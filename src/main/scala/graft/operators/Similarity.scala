@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.VectorFunctions
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._

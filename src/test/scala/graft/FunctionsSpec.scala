@@ -1,6 +1,7 @@
 package graft
 
-import graft.functions.{Hashing, TextFunctions, VectorFunctions}
+import graft.functions.{Hashing, TextFunctions}
+import graft.plans.NativeExpressions
 import org.apache.spark.sql.functions._
 
 /** Unit specs for the codegen'd function library (engine extensions). */
@@ -111,7 +112,7 @@ class FunctionsSpec extends SparkTestBase {
     val df = Seq(("x", "the quick brown fox jumps over the lazy dog again"),
       ("y", "the quick brown fox jumps over the lazy dog again"))
       .toDF("id", "text")
-      .withColumn("sig", Hashing.minHashSignature(
+      .withColumn("sig", NativeExpressions.minHashSignature(
         TextFunctions.wordShingles(col("text"), 2), 32))
     val sigs = df.select("sig").collect().map(_.getSeq[Long](0))
     assert(sigs(0) == sigs(1))
@@ -124,8 +125,8 @@ class FunctionsSpec extends SparkTestBase {
       .toDF("t1", "t2")
       .select(
         Hashing.minHashJaccard(
-          Hashing.minHashSignature(split(col("t1"), " "), 64),
-          Hashing.minHashSignature(split(col("t2"), " "), 64)).as("j"))
+          NativeExpressions.minHashSignature(split(col("t1"), " "), 64),
+          NativeExpressions.minHashSignature(split(col("t2"), " "), 64)).as("j"))
     val js = df.collect().map(_.getDouble(0))
     assert(js(0) == 1.0 && js(1) < 0.3)
   }
@@ -137,7 +138,7 @@ class FunctionsSpec extends SparkTestBase {
       "the quick brown fox jumps over the lazy dog one two three four five six",
       "the quick brown fox jumps over the lazy dog one two three four five seven",
       "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi")
-      .toDF("text").select(Hashing.simHash(TextFunctions.tokens(col("text"))).as("h"))
+      .toDF("text").select(NativeExpressions.simHash64(TextFunctions.tokens(col("text"))).as("h"))
     val hs = df.collect().map(_.getLong(0))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(hs(0), hs(1)) < ham(hs(0), hs(2)))
@@ -148,8 +149,8 @@ class FunctionsSpec extends SparkTestBase {
     import s.implicits._
     val df = Seq((Array(1.0f, 0.0f), Array(0.0f, 1.0f)), (Array(1.0f, 1.0f), Array(1.0f, 1.0f)))
       .toDF("a", "b")
-      .select(VectorFunctions.dot(col("a"), col("b")).as("d"),
-        VectorFunctions.cosine(col("a"), col("b")).as("c"))
+      .select(NativeExpressions.dot(col("a"), col("b")).as("d"),
+        NativeExpressions.cosine(col("a"), col("b")).as("c"))
     val rows = df.collect()
     assert(rows(0).getDouble(0) == 0.0 && rows(0).getDouble(1) == 0.0)
     assert(rows(1).getDouble(0) == 2.0 && math.abs(rows(1).getDouble(1) - 1.0) < 1e-12)
@@ -159,7 +160,7 @@ class FunctionsSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val df = Seq(Array(1.0f, 2.0f, 3.0f), Array(1.0f, 2.0f, 3.0f), Array(-1.0f, -2.0f, -3.0f))
-      .toDF("v").select(VectorFunctions.cosineLshBucket(col("v"), 8).as("b"))
+      .toDF("v").select(NativeExpressions.lshBucket(col("v"), 8).as("b"))
     val bs = df.collect().map(_.getLong(0))
     assert(bs(0) == bs(1))
     // antipodal vector flips every plane sign → complement bucket

@@ -206,8 +206,8 @@ class StreamingBatterySpec extends SparkTestBase {
       .agg(expr("CAST(COUNT(*) AS BIGINT)").as("n_events"),
         round(sum(col("value")), 4).as("sum_value"))
     assertSameRows(got, want)
-    // the tail window (the one holding the global max timestamp) is the
-    // regression canary for the sentinel/watermark interplay
+    // the tail window (the one holding the global max timestamp) is where a
+    // regression in the sentinel/watermark interplay shows first
     val maxTs = Tables.events(spark, sf).agg(max("ts_ms")).head.getLong(0)
     val tailWin = (maxTs / 3600000L) * 3600000L
     assert(got.filter(col("window_start") === tailWin).count() > 0,

@@ -3,10 +3,11 @@
 
 Usage: tools/bench_attrib.py run1.json run2.json [run3.json ...]
 
-Takes two or more bench_out.json artifacts (same battery) and reports:
-  - headline totals / normalized / contention_index / canary floor per run;
-  - probe summaries per run (io write/read, 1-thread cpu speed, cpufreq,
-    page cache) — the non-CPU telemetry added in round 8;
+Takes two or more bench_out_c<cpus>.json artifacts (same battery) and
+reports:
+  - headline totals per run (raw `value`, `cpus`, `cold_total` where the
+    artifact carries it);
+  - the drift verdict: the median per-row wall ratio against the first run;
   - the swing decomposition: for each row, wall minus the min wall across
     runs; summed, this says whether a slow run is slow BROADLY (every row
     a bit slower: frequency / JVM-global state) or CONCENTRATED (a few
@@ -26,26 +27,14 @@ def load(path):
         return json.load(f)
 
 
-def probe_summary(run):
-    ps = run.get("probes", [])
-    if not ps:
-        return "no probe series (pre-r8 artifact)"
-    def med(k):
-        vals = [p[k] for p in ps if p.get(k, -1) >= 0]
-        return statistics.median(vals) if vals else -1.0
-    return (f"io_w {med('io_w_sec'):.3f}s io_r {med('io_r_sec'):.3f}s "
-            f"cpu1 {med('cpu1_sec'):.3f}s freq {med('freq_mhz'):.0f}MHz "
-            f"cached {med('cached_mb'):.0f}MB avail {med('avail_mb'):.0f}MB")
-
-
 def drift_verdict(base, other, names):
     """Median per-row wall ratio other/base across all common rows, plus a
     verdict: when the MEDIAN row moves >15% in either direction the run
     pair is dominated by box/environment drift, not by targeted changes
     (a real optimization round moves the rows it touched, not the median
     untouched row) — the r9 failure mode where a uniform +25-40% inflation
-    across untouched sub-second rows sailed past the contention normalizer
-    (r9 VERDICT "Next round" #7)."""
+    across untouched sub-second rows sailed past the bench's (since
+    removed) contention normalizer (r9 VERDICT "Next round" #7)."""
     ratios = []
     for n in names:
         b = base["queries"].get(n, -1)
@@ -62,39 +51,20 @@ def drift_verdict(base, other, names):
             f"{100*frac_inflated:.0f}% rows >15% slower) -> {verdict}")
 
 
-def env_fingerprint_diff(base, other):
-    """Probe-median deltas between two runs: the environment fingerprint a
-    drift verdict should ship with (io bandwidth, single-thread speed,
-    cpu frequency, page cache)."""
-    def med(run, k):
-        ps = run.get("probes", [])
-        vals = [p[k] for p in ps if p.get(k, -1) >= 0]
-        return statistics.median(vals) if vals else -1.0
-    parts = []
-    for k in ("io_w_sec", "io_r_sec", "cpu1_sec", "freq_mhz", "cached_mb"):
-        b, o = med(base, k), med(other, k)
-        if b > 0 and o > 0:
-            parts.append(f"{k} {b:.3g}->{o:.3g} ({o/b:.2f}x)")
-    return "; ".join(parts) if parts else "no probe series"
-
-
 def main(paths):
     runs = [(p, load(p)) for p in paths]
     names = sorted(runs[0][1]["queries"].keys())
     for p, r in runs:
-        floor = r.get("canary", {}).get("floor_sec", -1)
-        print(f"{p}: total {r['value']:.1f}s norm {r['value_normalized']} "
-              f"ci {r['contention_index']} canary_floor {floor}")
-        print(f"  probes: {probe_summary(r)}")
+        cold = r.get("cold_total")
+        print(f"{p}: total {r['value']:.1f}s cpus {r.get('cpus', '?')}"
+              + (f" cold_total {cold:.1f}s" if cold is not None else ""))
 
     # drift verdict vs the first run (r9 VERDICT #7: flag runs whose
-    # untouched-row median deviates >15% from 1.0, with the environment
-    # fingerprint diff alongside)
+    # untouched-row median deviates >15% from 1.0)
     base_p, base = runs[0]
     print(f"\ndrift check (vs {base_p}):")
     for p, r in runs[1:]:
         print(f"  {p}: {drift_verdict(base, r, names)}")
-        print(f"    env: {env_fingerprint_diff(base, r)}")
 
     # per-row swing vs the cross-run min
     mins = {n: min(r["queries"].get(n, float("inf")) for _, r in runs)
@@ -118,9 +88,15 @@ def main(paths):
     if all("rep_own_cpu_sec" in r for _, r in runs):
         print("\nown-cpu split on the 10 most-swinging rows "
               "(wall ratio vs cpu ratio, slowest run vs fastest run):")
-        slowest = max(runs, key=lambda pr: pr[1]["value"])
-        fastest = min(runs, key=lambda pr: pr[1]["value"])
-        swings = sorted(names,
+        # rank runs on the rows they all share, so a subset run
+        # (SPARK_GRAFT_BENCH_ONLY) compares like with like
+        common = [n for n in names
+                  if all(n in r["queries"] for _, r in runs)]
+        def common_total(pr):
+            return sum(pr[1]["queries"][n] for n in common)
+        slowest = max(runs, key=common_total)
+        fastest = min(runs, key=common_total)
+        swings = sorted(common,
                         key=lambda n: -(slowest[1]["queries"].get(n, 0) -
                                         fastest[1]["queries"].get(n, 0)))[:10]
         for n in swings:
