@@ -16,7 +16,9 @@ package graft
   * rejected: it filters episodes but loses the warm pair. Each row's first
   * execution is also reported, as its `cold` wall. The cache is cleared
   * between executions so operator-internal persists (LSH signature
-  * tables) don't leak a warm second run.
+  * tables) don't leak a warm second run. [[Tables.parquet]]'s resolved
+  * relations stay on: they hold schema and file listing, checked on every
+  * read, never rows.
   */
 object Bench {
   /** Back-to-back executions per row in pass 1. */
@@ -48,28 +50,30 @@ object Bench {
     def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     def obj(kvs: Seq[(String, String)]) =
       kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    def nums(rs: Seq[(String, Double)]) = obj(rs.map { case (k, v) => k -> v.toString })
-    def perExec(f: Exec => String) =
-      obj(rows.map { case (k, es) => k -> es.flatten.map(f).mkString("[", ",", "]") })
-    def total(rs: Seq[(String, Double)]) = rs.map(_._2).sum
     // a row whose every execution failed reads -1.0, never a plausible
     // time; likewise `cold` when the first execution failed
-    val best = rows.map { case (k, es) =>
-      k -> es.flatten.map(_.wallSec).minOption.getOrElse(-1.0) }
-    val cold = rows.map { case (k, es) => k -> es.headOption.flatten.fold(-1.0)(_.wallSec) }
+    def nums(rs: Seq[(String, Option[Double])]) =
+      obj(rs.map { case (k, v) => k -> v.getOrElse(-1.0).toString })
+    def perExec(f: Exec => String) =
+      obj(rows.map { case (k, es) => k -> es.flatten.map(f).mkString("[", ",", "]") })
+    // totals sum only the rows that have a time; `failed` counts the rest
+    def total(rs: Seq[(String, Option[Double])]) = rs.flatMap(_._2).sum
+    val best = rows.map { case (k, es) => k -> es.flatten.map(_.wallSec).minOption }
+    val cold = rows.map { case (k, es) => k -> es.headOption.flatten.map(_.wallSec) }
     // three regimes, each legible across rounds: _check_ rows re-run the
     // operator under test plus a brute-force reference (cost tracks
     // verification depth); _stream_ rows pay a full AvailableNow query
     // start/stop per execution; the rest is the batch engine itself
     val (checks, rest) = best.partition(_._1.contains("_check_"))
     val (streams, ops) = rest.partition(_._1.contains("_stream_"))
-    val head = s""""metric":"total","value":${total(best)},"unit":"sec","n":${rows.size},"cpus":$cpus,"reps_per_query":$repsPerQuery,"operators_sec":${total(ops)},"streaming_sec":${total(streams)},"verification_sec":${total(checks)},"cold_total":${total(cold)}"""
+    val head = s""""metric":"total","value":${total(best)},"unit":"sec","n":${rows.size},"failed":${best.count(_._2.isEmpty)},"cpus":$cpus,"reps_per_query":$repsPerQuery,"operators_sec":${total(ops)},"streaming_sec":${total(streams)},"verification_sec":${total(checks)},"cold_total":${total(cold)}"""
     val tail = s""""queries":${nums(best)},"cold":${nums(cold)},"sf":"$sf""""
     // every execution's raw wall, own cpu, GC and JIT per row, so the
     // artifact itself tells box drift (one slow execution) from a real
     // regression (all slow), and wait-shaped from compute-shaped
     val execs = s""""rep_times":${perExec(e => fmt(e.wallSec))},"rep_own_cpu_sec":${perExec(e => fmt(e.cpuSec))},"rep_gc_ms":${perExec(_.gcMs.toString)},"rep_jit_ms":${perExec(_.jitMs.toString)}"""
-    val slowest = obj(best.sortBy(-_._2).take(10).map { case (k, v) => k -> fmt(v) })
+    val slowest = obj(best.collect { case (k, Some(v)) => k -> v }
+      .sortBy(-_._2).take(10).map { case (k, v) => k -> fmt(v) })
     Report(
       summary = s"{$head,$tail}",
       full = s"{$head,$execs,$tail}",

@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.sources.BaseRelation
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -16,7 +19,86 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** A parquet file or directory, resolved once per session.
+    *
+    * `spark.read.parquet` infers the schema on every call, and that
+    * inference is a Spark job (one task reading a footer). Here the
+    * resolved relation (schema plus file listing) is kept per (session,
+    * path) and handed out through `baseRelationToDataFrame`, which gives
+    * every call fresh attribute ids, so two reads of one table still
+    * self-join. Only metadata is kept, never rows: every call re-lists the
+    * path on the driver and re-resolves when any file's path, length or
+    * mtime changed, or when the session's schema-inference conf did. Globs
+    * and paths that cannot be listed go straight to `spark.read.parquet`.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val files = listing(spark, path)
+    if (files.isEmpty) return spark.read.parquet(path)
+    val conf = inferenceConf(spark)
+    val hit = resolved.synchronized {
+      // a stopped session's relations are never served again: drop them
+      resolved.keySet.removeIf(_.sparkContext.isStopped)
+      Option(resolved.get(spark)).flatMap(m => Option(m.get(path)))
+    }
+    hit.filter(r => r.files == files.get && r.conf == conf) match {
+      case Some(r) => spark.baseRelationToDataFrame(r.relation)
+      case None =>
+        // listed before resolving: a file written in between leaves an
+        // entry whose listing is older than its relation, which the next
+        // call sees as changed and resolves again
+        val df = spark.read.parquet(path)
+        df.queryExecution.analyzed match {
+          case l: LogicalRelation => resolved.synchronized {
+            resolved.computeIfAbsent(spark, _ => lru(pathsPerSession))
+              .put(path, Resolved(conf, files.get, l.relation))
+          }
+          case _ =>
+        }
+        df
+    }
+  }
+
+  private final case class Resolved(conf: Map[String, String],
+      files: Seq[(String, Long, Long)], relation: BaseRelation)
+
+  // session -> path -> relation. A relation holds its session, so nothing
+  // here is released by the garbage collector: a stopped session's entries
+  // go on the next read, and past these bounds the least recently read
+  // session or path goes, so per-run scratch inputs do not pile up.
+  private val pathsPerSession = 256
+  private val resolved = lru[SparkSession, java.util.Map[String, Resolved]](16)
+  private def lru[K, V](bound: Int): java.util.Map[K, V] =
+    new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > bound
+    }
+
+  /** Explicitly set confs that change what schema inference or file
+    * listing resolves.
+    */
+  private def inferenceConf(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.contains("parquet") || k.startsWith("spark.sql.files.ignore") ||
+      k.startsWith("spark.sql.sources.partition") ||
+      k == "spark.sql.caseSensitive" || k == "spark.sql.session.timeZone"
+    }
+
+  /** Every file under `path` as (path, length, mtime), from
+    * `getFileStatus`/`listStatus` only: on the local file system without
+    * Hadoop's native library, reading permissions forks a process per file.
+    * `None` for globs and for paths that cannot be listed.
+    */
+  private def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] =
+    if (path.exists("*?[{\\".contains(_))) None
+    else try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def walk(st: FileStatus): Seq[(String, Long, Long)] =
+        if (st.isDirectory) fs.listStatus(st.getPath).sortBy(_.getPath.toString).toSeq.flatMap(walk)
+        else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+      Some(walk(fs.getFileStatus(p)))
+    } catch { case _: java.io.IOException | _: IllegalArgumentException => None }
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")

@@ -75,7 +75,7 @@ final class Pipeline(val spark: SparkSession) {
     * opaque path).
     */
   def readParquet(path: String): PCollection[Row] =
-    fromDataFrame(spark.read.parquet(path))
+    fromDataFrame(graft.Tables.parquet(spark, path))
   def readCsv(path: String, header: Boolean = true): PCollection[Row] =
     fromDataFrame(spark.read.option("header", header.toString)
       .option("inferSchema", "true").csv(path))

@@ -6,6 +6,7 @@ import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path}
 import java.util.Comparator
 
@@ -168,7 +169,7 @@ object StreamingBattery {
     * replays a bounded slice through the streaming topology.
     */
   private def streamParquet(s: SparkSession, path: String): DataFrame = {
-    val schema = s.read.parquet(path).schema
+    val schema = Tables.parquet(s, path).schema
     val p = new java.io.File(path)
     if (p.isFile)
       // FileStreamSource requires a directory source: stream the parent,
@@ -179,7 +180,8 @@ object StreamingBattery {
   }
 
   /** Run a streaming DataFrame to a parquet sink with AvailableNow, read
-    * the sink back, materialize it off the sink files (localCheckpoint —
+    * the sink back with the stream's own schema (inferring it would cost a
+    * Spark job), materialize it off the sink files (localCheckpoint —
     * small-by-contract battery results), then delete every scratch path so
     * repeated battery runs never accumulate /tmp state (the delete runs in
     * a finally, so a failed query cleans up too).
@@ -203,7 +205,7 @@ object StreamingBattery {
         q.awaitTermination()
         val hasData = Files.exists(sink) && Files.list(sink)
           .anyMatch(p => p.getFileName.toString.endsWith(".parquet"))
-        if (hasData) s.read.parquet(sink.toString).localCheckpoint(true)
+        if (hasData) s.read.schema(out.schema).parquet(sink.toString).localCheckpoint(true)
         else s.createDataFrame(
           s.sparkContext.emptyRDD[org.apache.spark.sql.Row], out.schema)
       } finally deleteRecursively(root)
@@ -523,7 +525,7 @@ object StreamingBattery {
         StructField("cnt", LongType),
         StructField("amt", DecimalType(38, 2)))))
       var nBatches = 0
-      val src = s.readStream.schema(s.read.parquet(in.toString).schema)
+      val src = s.readStream.schema(Tables.parquet(s, in.toString).schema)
         .option("maxFilesPerTrigger", "1").parquet(in.toString)
       val guard = new BatchIdGuard
       val q = src.writeStream
@@ -604,9 +606,9 @@ object StreamingBattery {
       ev.filter(col("event_id") % 2 === 0).drop("event_id")
         .write.parquet(in.toString)
 
-      def runOnce(): Unit = {
+      def runOnce(): StructType = {
         val src = s.readStream
-          .schema(s.read.parquet(in.toString).schema).parquet(in.toString)
+          .schema(Tables.parquet(s, in.toString).schema).parquet(in.toString)
           .withColumn("hr_ts", timestamp_millis(col("hr") * 3600000))
         val deduped = StreamingOps.dedupExactStream(
           src, Seq("user_id", "event_type", "hr"), "hr_ts", "3650 days")
@@ -615,13 +617,14 @@ object StreamingBattery {
           .option("checkpointLocation", ck.toString)
           .trigger(Trigger.AvailableNow()).start()
         q.awaitTermination()
+        deduped.schema
       }
-      runOnce()
-      val afterRun1 = s.read.parquet(sink.toString).count()
+      val schema = runOnce()
+      val afterRun1 = s.read.schema(schema).parquet(sink.toString).count()
       ev.filter(col("event_id") % 2 === 1).drop("event_id")
         .write.mode("append").parquet(in.toString)
       runOnce()
-      val out = s.read.parquet(sink.toString).localCheckpoint(true)
+      val out = s.read.schema(schema).parquet(sink.toString).localCheckpoint(true)
       require(afterRun1 > 0 && afterRun1 < out.count(),
         s"run 1 emitted $afterRun1 of ${out.count()} keys: resume untested")
       out.groupBy(col("event_type"))
@@ -743,7 +746,7 @@ object StreamingBattery {
     try {
       var snap = base.localCheckpoint(true)
       var nBatches = 0
-      val src = s.readStream.schema(s.read.parquet(in.toString).schema)
+      val src = s.readStream.schema(Tables.parquet(s, in.toString).schema)
         .option("maxFilesPerTrigger", "1").parquet(in.toString)
       val guard = new BatchIdGuard
       val q = src.writeStream
@@ -806,7 +809,7 @@ object StreamingBattery {
       val totals = scala.collection.mutable.Map
         .empty[(String, String), (Long, Long)]
       var nBatches = 0
-      val src = s.readStream.schema(s.read.parquet(in.toString).schema)
+      val src = s.readStream.schema(Tables.parquet(s, in.toString).schema)
         .option("maxFilesPerTrigger", "1").parquet(in.toString)
       val guard = new BatchIdGuard
       val q = src.writeStream
@@ -860,7 +863,7 @@ object StreamingBattery {
         StructType(Seq(StructField("score", DoubleType),
           StructField("pos", LongType), StructField("neg", LongType))))
       var nBatches = 0
-      val src = s.readStream.schema(s.read.parquet(in.toString).schema)
+      val src = s.readStream.schema(Tables.parquet(s, in.toString).schema)
         .option("maxFilesPerTrigger", "1").parquet(in.toString)
       val guard = new BatchIdGuard
       val q = src.writeStream
@@ -928,7 +931,7 @@ object StreamingBattery {
           StructField("n_ticks", LongType),
           StructField("sum_value", DoubleType))))
       var nBatches = 0
-      val src = s.readStream.schema(s.read.parquet(in.toString).schema)
+      val src = s.readStream.schema(Tables.parquet(s, in.toString).schema)
         .option("maxFilesPerTrigger", "1").parquet(in.toString)
       val guard = new BatchIdGuard
       val q = src.writeStream
@@ -992,7 +995,7 @@ object StreamingBattery {
       stageTimeSlices(ev, "ts_ms", "user_id", root, in)
     }
     val src = s.readStream
-      .schema(s.read.parquet(in.toString).schema)
+      .schema(Tables.parquet(s, in.toString).schema)
       .option("maxFilesPerTrigger", "1").parquet(in.toString)
       .as[(Long, Long, Long, Long)]
     val out = StreamingOps.ewmaStream(src, depth = 8)
@@ -1029,7 +1032,7 @@ object StreamingBattery {
       stageTimeSlices(ev, "ts_ms", "user_id", root, in)
     }
     val src = s.readStream
-      .schema(s.read.parquet(in.toString).schema)
+      .schema(Tables.parquet(s, in.toString).schema)
       .option("maxFilesPerTrigger", "1").parquet(in.toString)
       .as[(Long, Long, Long, Int, Long, Double)]
     val out = StreamingOps
@@ -1073,7 +1076,7 @@ object StreamingBattery {
         root, in, "zz-flush.parquet", System.currentTimeMillis())
     }
     val src = s.readStream
-      .schema(s.read.parquet(in.toString).schema)
+      .schema(Tables.parquet(s, in.toString).schema)
       .option("maxFilesPerTrigger", "1").parquet(in.toString)
       .as[(Long, Long, Long, String, Int)]
     val out = StreamingOps.scd2Stream(src)
@@ -1111,7 +1114,7 @@ object StreamingBattery {
         root, in, "zz-flush.parquet", System.currentTimeMillis())
     }
     val src = s.readStream
-      .schema(s.read.parquet(in.toString).schema)
+      .schema(Tables.parquet(s, in.toString).schema)
       .option("maxFilesPerTrigger", "1").parquet(in.toString)
       .as[(Long, Long, Long, Long, Int)]
     val out = StreamingOps.intervalMergeStream(src)
@@ -1137,7 +1140,7 @@ object StreamingBattery {
       stageTimeSlices(ev, "ts_ms", "user_id", root, in)
     }
     val src = s.readStream
-      .schema(s.read.parquet(in.toString).schema)
+      .schema(Tables.parquet(s, in.toString).schema)
       .option("maxFilesPerTrigger", "1").parquet(in.toString)
       .as[(Long, Long, Long, Long)]
     val out = StreamingOps.balanceStream(src)
@@ -1176,7 +1179,7 @@ object StreamingBattery {
         root, in, "zz-flush.parquet", System.currentTimeMillis())
     }
     val src = s.readStream
-      .schema(s.read.parquet(in.toString).schema)
+      .schema(Tables.parquet(s, in.toString).schema)
       .option("maxFilesPerTrigger", "1").parquet(in.toString)
       .as[(Long, Long, Long, Long, Int)]
     val out = StreamingOps.sprtStream(src)
@@ -1208,7 +1211,7 @@ object StreamingBattery {
       stageTimeSlices(docs, "doc_id", "source", root, in)
     }
     val src = s.readStream
-      .schema(s.read.parquet(in.toString).schema)
+      .schema(Tables.parquet(s, in.toString).schema)
       .option("maxFilesPerTrigger", "1").parquet(in.toString)
       .as[(String, Long, Long)]
     val packed = StreamingOps.packStream(src, budget = 512L)
@@ -1255,7 +1258,7 @@ object StreamingBattery {
     // in 3 s. Gram extraction stays on the native expression.
     val evalBc = s.sparkContext.broadcast(evalGrams)
     val raw = s.readStream
-      .schema(s.read.parquet(in.toString).schema)
+      .schema(Tables.parquet(s, in.toString).schema)
       .option("maxFilesPerTrigger", "1").parquet(in.toString)
     // gate flags as stateless stream columns — the SHARED gopherPass
     // predicate (one rule definition with qualityGateStream/d121);
@@ -1313,7 +1316,7 @@ object StreamingBattery {
           StructField("coarse", LongType), StructField("fine", LongType),
           StructField("n", LongType), StructField("digest", LongType))))
       var nBatches = 0
-      val src = s.readStream.schema(s.read.parquet(in.toString).schema)
+      val src = s.readStream.schema(Tables.parquet(s, in.toString).schema)
         .option("maxFilesPerTrigger", "1").parquet(in.toString)
       val guard = new BatchIdGuard
       val q = src.writeStream

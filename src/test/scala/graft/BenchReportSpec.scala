@@ -31,8 +31,9 @@ class BenchReportSpec extends AnyFunSuite {
     val s = summary
     assert(field(s, "queries") == Map("q01_scan" -> 0.25,
       "d130_check_agg" -> 1.5, "d124_stream_windows" -> 3.0, "d90_broken" -> -1.0))
-    assert(s.get("value").asDouble == field(s, "queries").values.sum)
+    assert(s.get("value").asDouble == 0.25 + 1.5 + 3.0)
     assert(s.get("n").asInt == 4 && s.get("cpus").asInt == 8)
+    assert(s.get("failed").asInt == 1)
   }
 
   test("a row with no successful execution reads -1.0") {
@@ -44,14 +45,14 @@ class BenchReportSpec extends AnyFunSuite {
     val s = summary
     assert(field(s, "cold") == Map("q01_scan" -> 0.5,
       "d130_check_agg" -> -1.0, "d124_stream_windows" -> 4.0, "d90_broken" -> -1.0))
-    assert(s.get("cold_total").asDouble == field(s, "cold").values.sum)
+    assert(s.get("cold_total").asDouble == 0.5 + 4.0)
   }
 
   test("the _check_/_stream_ family splits add up to value") {
     val s = summary
     assert(s.get("verification_sec").asDouble == 1.5)
     assert(s.get("streaming_sec").asDouble == 3.0)
-    assert(s.get("operators_sec").asDouble == 0.25 - 1.0)
+    assert(s.get("operators_sec").asDouble == 0.25)
     val parts = Seq("operators_sec", "streaming_sec", "verification_sec")
       .map(s.get(_).asDouble).sum
     assert(math.abs(parts - s.get("value").asDouble) < 1e-9)

@@ -7,7 +7,9 @@ Takes two or more bench_out_c<cpus>.json artifacts (same battery) and
 reports:
   - headline totals per run (raw `value`, `cpus`, `cold_total` where the
     artifact carries it);
-  - the drift verdict: the median per-row wall ratio against the first run;
+  - the drift verdict: the median per-row wall ratio against the first run,
+    skipped for a run at another core count than the first (fewer or more
+    cores move every row, which is not drift);
   - the swing decomposition: for each row, wall minus the min wall across
     runs; summed, this says whether a slow run is slow BROADLY (every row
     a bit slower: frequency / JVM-global state) or CONCENTRATED (a few
@@ -64,7 +66,11 @@ def main(paths):
     base_p, base = runs[0]
     print(f"\ndrift check (vs {base_p}):")
     for p, r in runs[1:]:
-        print(f"  {p}: {drift_verdict(base, r, names)}")
+        if r.get("cpus") != base.get("cpus"):
+            print(f"  {p}: cpus {r.get('cpus', '?')} vs {base.get('cpus', '?')}"
+                  " -> core counts differ, no drift verdict")
+        else:
+            print(f"  {p}: {drift_verdict(base, r, names)}")
 
     # per-row swing vs the cross-run min
     mins = {n: min(r["queries"].get(n, float("inf")) for _, r in runs)
