@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{FrequencySketch, TextFunctions}
-import graft.operators.{Dedup, MediaCodec, Multimodal, ScaleOps, Similarity}
+import graft.operators.{Dedup, GraphOps, MediaCodec, Multimodal, ScaleOps, Similarity}
 import graft.plans.NativeExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,31 +54,18 @@ object ModelChecks {
   @volatile var sharedDerivationsEnabled: Boolean = true
   private val derivMemo =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]
-  // RDDs pinned by each shared() materialization (memoized AND
+  // checkpoints pinned by each shared() materialization (memoized AND
   // disabled-path transients), so the drain hook can release the blocks —
   // a localCheckpoint's Dataset.unpersist is a no-op (the blocks live on
   // the checkpoint RDD, not in the CacheManager)
-  private val pinnedRdds =
-    java.util.concurrent.ConcurrentHashMap
-      .newKeySet[org.apache.spark.rdd.RDD[_]]
-
-  /** The persisted ancestors of a plan's RDD lineage — for a localCheckpoint
-    * Dataset, exactly the checkpoint RDD holding the blocks. Walked from
-    * the Dataset itself (never a global getPersistentRDDs diff, which
-    * could capture an UNRELATED concurrent persist and later drain blocks
-    * another plan still needs).
-    */
-  private def pinnedAncestors(rdd: org.apache.spark.rdd.RDD[_])
-      : Seq[org.apache.spark.rdd.RDD[_]] =
-    if (rdd.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      Seq(rdd)
-    else rdd.dependencies.map(_.rdd).flatMap(pinnedAncestors)
+  private val pinned =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[DataFrame]
 
   private def shared(s: SparkSession, d: String, name: String)
       (build: => DataFrame): DataFrame = {
     def checkpointTracked(): DataFrame = {
       val ck = build.localCheckpoint(true) // eager: blocks exist on return
-      pinnedAncestors(ck.queryExecution.toRdd).foreach(pinnedRdds.add)
+      pinned.add(ck)
       ck
     }
     // disabled path still materializes PER CALL (no cross-row sharing):
@@ -104,12 +91,12 @@ object ModelChecks {
     * late consumer would fail, loudly, rather than recompute.
     */
   def clearSharedDerivations(): Unit = {
-    val it = pinnedRdds.iterator()
+    val it = pinned.iterator()
     while (it.hasNext) {
-      try it.next().unpersist(blocking = false)
+      try GraphOps.releaseCheckpoint(it.next())
       catch { case _: Throwable => () } // stopped session: blocks are gone
     }
-    pinnedRdds.clear()
+    pinned.clear()
     derivMemo.clear()
   }
 
@@ -297,13 +284,14 @@ object ModelChecks {
       .join(emitted.withColumn("__e", lit(1)), Seq("id1", "id2"), "full_outer")
       .agg(sum(when(col("__e").isNull, 1L).otherwise(0L)).as("m"),
         sum(when(col("__b").isNull, 1L).otherwise(0L)).as("f")).head()
-    // the sigs checkpoint is dead once the single result row above is
-    // materialized — release its blocks here (Dataset.unpersist is a
-    // no-op for localCheckpoint blocks; unpersist the checkpoint RDD
-    // itself), else every d128 execution leaks them for the session
-    // lifetime (r9 ADVICE — the same leak class bpeTrain fixed in r9)
-    pinnedAncestors(sigs.queryExecution.toRdd)
-      .foreach(_.unpersist(blocking = false))
+    // the sigs checkpoint, and the pair-list checkpoint simHashPairs hands
+    // back, are dead once the single result row above is materialized —
+    // release their blocks here (Dataset.unpersist is a no-op for
+    // localCheckpoint blocks; unpersist the checkpoint RDD itself), else
+    // every d128 execution leaks them for the session lifetime (r9 ADVICE
+    // — the same leak class bpeTrain fixed in r9)
+    GraphOps.releaseCheckpoint(sigs)
+    GraphOps.releaseCheckpoint(emitted)
     def z(i: Int) = if (row.isNullAt(i)) 0L else row.getLong(i)
     Seq((z(0), z(1))).toDF("missed_pairs", "fabricated_pairs")
   }

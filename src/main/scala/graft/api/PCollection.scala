@@ -3,7 +3,6 @@ package graft.api
 import graft.core._
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
-import scala.collection.mutable
 
 /** A PCollection: unordered bag of windowed elements, backed by a lazy
   * `Dataset[WindowedValue[T]]` (reference model: SURVEY.md §1.1;
@@ -56,7 +55,8 @@ final class PCollection[T](
 
   /** Full-lifecycle ParDo: one Spark partition = one bundle
     * (setup → startBundle → process* → finishBundle → teardown,
-    * translator.py:208-281). Each ParDo gets a system element counter
+    * translator.py:208-281), run by `graft.core.Runner.bundle`, the
+    * runner the streaming ParDos share. Each ParDo gets a system element counter
     * (reference tracks per-PCollection element counts,
     * ray_runner_test.py:1285-1514) queryable as
     * `metrics.counterValue("graft.system", "elements.<name>")`.
@@ -74,75 +74,19 @@ final class PCollection[T](
       implicit oe: GEnc[WindowedValue[O]]): PCollection[O] = {
     val opName = if (name.nonEmpty) name else s"op${PCollection.nextOpId()}"
     val elems = pipeline.metrics.counter("graft.system", s"elements.$opName")
-    val msecs = pipeline.metrics.counter("graft.system", s"msecs.$opName")
     val bytes = pipeline.metrics.distribution("graft.system", s"sampledByteSize.$opName")
     // Per-PHASE bundle msecs (reference reports start/process/finish bundle
     // msecs separately, ray_runner_test.py:1285-1514): one distribution
     // sample per bundle per phase, so capacity debugging can tell "is it
     // setup or process" — the total counter alone can't.
-    val msStart = pipeline.metrics.distribution("graft.system", s"msecsStart.$opName")
-    val msProcess = pipeline.metrics.distribution("graft.system", s"msecsProcess.$opName")
-    val msFinish = pipeline.metrics.distribution("graft.system", s"msecsFinish.$opName")
-    val ds = data.mapPartitions { it0 =>
-      val t0 = System.nanoTime()
-      val it = PCollection.instrument(it0, elems, bytes)
-      var toreDown = false
-      // val (not def): a nested def lifts to an instance method and the
-      // Spark closure would capture the non-serializable PCollection
-      val teardownOnce: () => Unit =
-        () => if (!toreDown) { toreDown = true; fn.teardown() }
-      // teardown is exception-safe: if process() throws mid-iteration the
-      // task-completion listener still runs it (Beam's best-effort contract)
-      Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener(
-        new org.apache.spark.util.TaskCompletionListener {
-          override def onTaskCompletion(c: org.apache.spark.TaskContext): Unit = {
-            try teardownOnce() catch { case _: Throwable => () }
-            msecs.add((System.nanoTime() - t0) / 1000000L)
-          }
-        }))
-      fn.setup()
-      fn.startBundle()
-      msStart.add((System.nanoTime() - t0) / 1000000L)
-      var processNanos = 0L
-      val ctx = new BufferingContext[O](0L, Seq(GlobalWindow))
-      // STREAMING output: per-element emissions flow through lazily (peak
-      // heap is one element's output, not the partition's — the 100 TB
-      // constraint); process per (element, window) — a multi-window element
-      // is k logical elements in Beam's model, so window-sensitive context
-      // (sideInput mapping, output window) resolves per window
-      val mainOut = it.flatMap(_.explode.iterator.flatMap { wv =>
-        ctx.currentTs = wv.timestamp; ctx.currentWindows = wv.windows
-        ctx.buf.clear()
-        val tp = System.nanoTime()
-        fn.process(wv.value, ctx)
-        processNanos += System.nanoTime() - tp
-        if (ctx.taggedBuf.nonEmpty)
-          throw new IllegalStateException(
-            s"DoFn emitted tagged output (${ctx.taggedBuf.map(_._1).distinct.mkString(",")}) " +
-              "from a plain parDo — use parDoTagged so tagged outputs are routed, not dropped")
-        ctx.buf.toList.asInstanceOf[List[WindowedValue[O]]]
-      })
-      // finishBundle/teardown run lazily after the last element (Iterator.++
-      // is by-name); finalization callbacks fire post task commit,
-      // at-least-once, exceptions swallowed (execution.py:131-139)
-      val tail: () => Iterator[WindowedValue[O]] = () => {
-        msProcess.add(processNanos / 1000000L)
-        val tf = System.nanoTime()
-        val buf = mutable.ArrayBuffer.empty[WindowedValue[O]]
-        fn.finishBundle(o => buf += WindowedValue.of(o))
-        msFinish.add((System.nanoTime() - tf) / 1000000L)
-        teardownOnce()
-        if (ctx.finalizers.nonEmpty) {
-          val cbs = ctx.finalizers.toList
-          Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener(
-            new org.apache.spark.util.TaskCompletionListener {
-              override def onTaskCompletion(c: org.apache.spark.TaskContext): Unit =
-                cbs.foreach(cb => try cb() catch { case _: Throwable => () })
-            }))
-        }
-        buf.iterator
-      }
-      mainOut ++ tail()
+    val timers = BundleTimers(
+      pipeline.metrics.counter("graft.system", s"msecs.$opName"),
+      pipeline.metrics.distribution("graft.system", s"msecsStart.$opName"),
+      pipeline.metrics.distribution("graft.system", s"msecsProcess.$opName"),
+      pipeline.metrics.distribution("graft.system", s"msecsFinish.$opName"))
+    val ds = data.mapPartitions { it =>
+      Runner.bundle(fn, PCollection.instrument(it, elems, bytes), Runner.NoTags, Some(timers))
+        .map(_._2.asInstanceOf[WindowedValue[O]])
     }(oe.enc)
     next(ds)
   }
@@ -165,47 +109,9 @@ final class PCollection[T](
     val opName = if (name.nonEmpty) name else s"op${PCollection.nextOpId()}"
     val elems = pipeline.metrics.counter("graft.system", s"elements.$opName")
     val bytes = pipeline.metrics.distribution("graft.system", s"sampledByteSize.$opName")
-    val declaredTags = tags.map(_.name).toSet
-    val tagged: Dataset[(String, WindowedValue[Any])] = data.mapPartitions { it0 =>
-      val it = PCollection.instrument(it0, elems, bytes)
-      var toreDown = false
-      val teardownOnce: () => Unit = // val, not def — see parDo
-        () => if (!toreDown) { toreDown = true; fn.teardown() }
-      Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener(
-        new org.apache.spark.util.TaskCompletionListener {
-          override def onTaskCompletion(c: org.apache.spark.TaskContext): Unit =
-            try teardownOnce() catch { case _: Throwable => () }
-        }))
-      fn.setup(); fn.startBundle()
-      val ctx = new BufferingContext[O](0L, Seq(GlobalWindow))
-      val mainOut = it.flatMap(_.explode.iterator.flatMap { wv => // streaming; see parDo
-        ctx.currentTs = wv.timestamp; ctx.currentWindows = wv.windows
-        ctx.buf.clear(); ctx.taggedBuf.clear()
-        fn.process(wv.value, ctx)
-        // an emission to an UNDECLARED tag would otherwise vanish: no branch
-        // downstream filters for it (same hazard parDo guards against)
-        ctx.taggedBuf.foreach { case (tag, _) =>
-          if (!declaredTags.contains(tag))
-            throw new IllegalStateException(
-              s"DoFn emitted to undeclared tag '$tag' (declared: ${declaredTags.mkString(",")})")
-        }
-        ctx.buf.toList.map(o => ("", o)) ++ ctx.taggedBuf.toList
-      })
-      val tail: () => Iterator[(String, WindowedValue[Any])] = () => {
-        val buf = mutable.ArrayBuffer.empty[(String, WindowedValue[Any])]
-        fn.finishBundle(o => buf += (("", WindowedValue.of(o))))
-        teardownOnce()
-        if (ctx.finalizers.nonEmpty) {
-          val cbs = ctx.finalizers.toList
-          Option(org.apache.spark.TaskContext.get()).foreach(_.addTaskCompletionListener(
-            new org.apache.spark.util.TaskCompletionListener {
-              override def onTaskCompletion(c: org.apache.spark.TaskContext): Unit =
-                cbs.foreach(cb => try cb() catch { case _: Throwable => () })
-            }))
-        }
-        buf.iterator
-      }
-      mainOut ++ tail()
+    val declaredTags = Some(tags.map(_.name).toSet)
+    val tagged: Dataset[(String, WindowedValue[Any])] = data.mapPartitions { it =>
+      Runner.bundle(fn, PCollection.instrument(it, elems, bytes), declaredTags)
     }(Encoders.tuple(Encoders.STRING, kryoEnc[WindowedValue[Any]]))
       .localCheckpoint(false)
     val main = next(tagged.filter(_._1 == "").map(_._2.asInstanceOf[WindowedValue[O]])(oe.enc))
@@ -618,7 +524,7 @@ final class PCollection[T](
 
   // -------------------------------------------------------------------------
   // Stateful ParDo (batch watermark sweep — SURVEY.md §7.1-4; the streaming
-  // variant lives in graft.streaming)
+  // variant in graft.streaming runs the same Runner.sweep)
   // -------------------------------------------------------------------------
 
   /** Stateful ParDo keyed by (key, window): state cells + event-time timer
@@ -634,8 +540,10 @@ final class PCollection[T](
       oe: GEnc[WindowedValue[O]]): PCollection[O] = {
     val ds = keyedByWindow[K, V](kwEnc)
       .flatMapGroups { (kw: (K, BoundedWindow), it: Iterator[WindowedValue[T]]) =>
-        PCollection.runStatefulGroup(fn, kw._1, kw._2,
-          it.map(wv => (ev(wv.value)._2, wv.timestamp)))
+        val ws = Seq(kw._2)
+        Runner.sweep(fn, kw._1, kw._2, it.map(wv => (ev(wv.value)._2, wv.timestamp)),
+          new StateCells, Long.MinValue, Long.MaxValue, enforceHold = false)
+          .map { case (o, ts) => WindowedValue(o, ts, ws) }
       }(oe.enc)
     next(ds)
   }
@@ -702,46 +610,5 @@ private[graft] object PCollection {
       i += 1
       e
     }
-  }
-
-  /** Per-(key, window) context; top-level class so Spark closures carry no
-    * reference to the (non-serializable) PCollection instance.
-    */
-  private final class GroupContext[O](k: Any, w: BoundedWindow, cells: StateCells)
-    extends StatefulContext[O] {
-    var curTs: Long = 0L
-    val out = mutable.ArrayBuffer.empty[WindowedValue[O]]
-    def key: Any = k
-    def window: BoundedWindow = w
-    def timestamp: Long = curTs
-    def output(o: O): Unit = out += WindowedValue(o, curTs, Seq(w))
-    def outputWithTimestamp(o: O, ts: Long): Unit = out += WindowedValue(o, ts, Seq(w))
-    def bag[U](spec: BagStateSpec[U]): BagState[U] = cells.bag(spec)
-    def value[U](spec: ValueStateSpec[U]): ValueState[U] = cells.value(spec)
-    def combining[I, A, OO](spec: CombiningStateSpec[I, A, OO]): CombiningState[I, OO] =
-      cells.combining(spec)
-    def timer(spec: TimerSpec): Timer = cells.timer(spec)
-  }
-
-  /** Batch stateful sweep for one (key, window) group: elements in timestamp
-    * order, then end-of-input timer pop-min loop (SURVEY.md §7.1-4; mirrors
-    * the reference's bundle re-feed loop ray_fn_runner.py:268-297).
-    */
-  def runStatefulGroup[K, V, O](
-      fn: StatefulDoFn[K, V, O], k: K, w: BoundedWindow,
-      elems: Iterator[(V, Long)]): Iterator[WindowedValue[O]] = {
-    val cells = new StateCells
-    val ctx = new GroupContext[O](k, w, cells)
-    elems.toVector.sortBy(_._2).foreach { case (v, ts) =>
-      ctx.curTs = ts
-      fn.process(k, v, ctx)
-    }
-    while (cells.timers.nonEmpty) {
-      val ((name, tag), ts) = cells.timers.minBy { case ((n, t), ts0) => (ts0, n, t) }
-      cells.timers.remove((name, tag))
-      ctx.curTs = ts
-      fn.onTimer(k, TimerSpec(name), tag, ts, ctx)
-    }
-    ctx.out.iterator
   }
 }

@@ -102,10 +102,10 @@ private[graft] object SideInputView {
   def nextId(): Int = counter.incrementAndGet()
 }
 
-/** Simple concrete ProcessContext used by the batch ParDo runner. */
-private[graft] final class BufferingContext[O](
-    var currentTs: Long,
-    var currentWindows: Seq[BoundedWindow]) extends ProcessContext[O] {
+/** The per-element ProcessContext of [[Runner.bundle]]. */
+private[graft] final class BufferingContext[O] extends ProcessContext[O] {
+  var currentTs: Long = 0L
+  var currentWindows: Seq[BoundedWindow] = Seq(GlobalWindow)
   val buf = mutable.ArrayBuffer.empty[WindowedValue[Any]]
   val taggedBuf = mutable.ArrayBuffer.empty[(String, WindowedValue[Any])]
   val finalizers = mutable.ArrayBuffer.empty[() => Unit]

@@ -21,17 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Free the blocks behind an (eagerly) `localCheckpoint`ed DataFrame.
-    * Iterative algorithms checkpoint per round; without an explicit release
-    * every round's blocks live until session end. The checkpointed RDD sits
-    * directly behind the `LogicalRDD` leaf of the returned Dataset.
-    */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** Exact dedup: keep the row with the smallest `tieBreaker` per key group.
     * Single shuffle (window on the dedup key). `tieBreaker` must be UNIQUE
     * within each key group (a row id) — ties would otherwise fall back to
@@ -221,13 +210,13 @@ object Dedup {
           .as("changed"))
       changed = Option(mCh("changed").asInstanceOf[java.lang.Long])
         .fold(0L)(_.longValue) // SUM over zero rows is NULL
-      releaseCheckpoint(labels) // round i-1's blocks are dead once round i lands
+      GraphOps.releaseCheckpoint(labels) // round i-1's blocks are dead once round i lands
       labels = updated.drop("__old")
       iter += 1
     }
     // hand back a small checkpointed result and free the last round's state
     val out = labels.select(col("id"), col("label").as("cluster_id")).localCheckpoint()
-    releaseCheckpoint(labels)
+    GraphOps.releaseCheckpoint(labels)
     edges.unpersist()
     out
   }

@@ -262,15 +262,14 @@ object Features {
         // word table in storage memory. Dataset.unpersist is a NO-OP for
         // localCheckpoint blocks (they live on the checkpoint RDD, never
         // registered with the CacheManager — r8 ADVICE), so the release
-        // walks the plan's RDD lineage to the persisted checkpoint RDD
-        // and unpersists THAT.
+        // unpersists the checkpoint RDD itself.
         val next = words
           .withColumn("__r", expr(foldedR))
           .select(col("word"), col("cnt"),
             expr("split(substring(__r, 2, length(__r) - 2), '\\\\)\\\\(')")
               .as("syms"))
           .localCheckpoint()
-        releaseCheckpointBlocks(words)
+        GraphOps.releaseCheckpoint(words)
         words = next
         // heartbeat for multi-hour production budgets (stderr, throttled):
         // a 30k-merge run is thousands of driver rounds with no other
@@ -280,38 +279,11 @@ object Features {
             s"[bpeTrain] round $rounds: ${merges.size}/$nMerges merges")
       }
     }
-    releaseCheckpointBlocks(words)
+    GraphOps.releaseCheckpoint(words)
     lastTrainRounds = rounds
     lastTrainBatchWidths = widths.toSeq
     spark.createDataFrame(merges.toSeq)
       .toDF("step", "pair_left", "pair_right", "merged", "pair_count")
-  }
-
-  /** Release the localCheckpoint blocks backing `df`. `Dataset.unpersist`
-    * cannot do this (it only uncaches CacheManager entries; localCheckpoint
-    * blocks are persisted on the checkpoint RDD directly — r8 ADVICE), so
-    * walk the plan's RDD lineage to its persisted ancestors (for a
-    * checkpointed Dataset: exactly the checkpoint RDD) and unpersist those.
-    * Walked from the Dataset itself, never a global getPersistentRDDs diff,
-    * so an unrelated concurrent persist can never be dropped.
-    */
-  private def releaseCheckpointBlocks(df: DataFrame): Unit = {
-    // Guard (r9 ADVICE): release ONLY frames whose plan IS a checkpoint
-    // (LogicalRDD). Called on a non-checkpointed frame, the lineage walk
-    // would find — and silently unpersist — whatever caller-owned persist
-    // feeds the plan. bpeTrain always passes a localCheckpoint'ed frame,
-    // so this never fires today; it pins the contract for future callers.
-    val plan = df.queryExecution.analyzed
-    require(plan.nodeName == "LogicalRDD",
-      s"releaseCheckpointBlocks expects a checkpointed frame " +
-        s"(LogicalRDD plan), got ${plan.nodeName} — releasing through an " +
-        "arbitrary plan could drop a caller-owned persist")
-    def persisted(r: org.apache.spark.rdd.RDD[_])
-        : Seq[org.apache.spark.rdd.RDD[_]] =
-      if (r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE)
-        Seq(r)
-      else r.dependencies.map(_.rdd).flatMap(persisted)
-    persisted(df.queryExecution.toRdd).foreach(_.unpersist(blocking = false))
   }
 
   /** Driver rounds (pair-table jobs) the last [[bpeTrain]] call took —

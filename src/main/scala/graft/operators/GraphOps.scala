@@ -46,6 +46,26 @@ object GraphOps {
     (ck, obs.get)
   }
 
+  /** Free the blocks behind a materialized `localCheckpoint`. Iterative
+    * loops checkpoint every round, and without a release each round's
+    * blocks live until session end. `Dataset.unpersist` cannot do it: it
+    * only uncaches CacheManager entries, and checkpoint blocks are persisted
+    * on the checkpoint RDD itself. The release takes only the checkpointed
+    * RDDs behind the plan's `LogicalRDD` leaves (`df` may project over
+    * them), never a lineage walk to whatever is persisted upstream, so a
+    * caller-owned persist is never dropped. A frame with no materialized
+    * checkpoint behind it throws.
+    */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit = {
+    val plan = df.queryExecution.analyzed
+    val checkpoints = plan.collectLeaves().collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD if l.rdd.isCheckpointed => l.rdd
+    }
+    require(checkpoints.nonEmpty,
+      s"releaseCheckpoint expects a checkpointed frame, got ${plan.nodeName}")
+    checkpoints.foreach(_.unpersist(blocking = false))
+  }
+
   /** Distinct undirected co-occurrence edges (a < b) from a (group, item)
     * relation: items sharing a group are connected; edges seen in fewer
     * than `minCount` groups are dropped. Fan-out per group is bounded by

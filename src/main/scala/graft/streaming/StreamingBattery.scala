@@ -605,10 +605,13 @@ object StreamingBattery {
         "no dedup key straddles the two halves: resume would be untested")
       ev.filter(col("event_id") % 2 === 0).drop("event_id")
         .write.parquet(in.toString)
+      // the schema this row itself writes (parquet reads every column back
+      // nullable): inferring it from `in`, fresh and then appended to, would
+      // start a schema-inference job on each of the two runs
+      val inSchema = StructType(ev.drop("event_id").schema.map(_.copy(nullable = true)))
 
       def runOnce(): StructType = {
-        val src = s.readStream
-          .schema(Tables.parquet(s, in.toString).schema).parquet(in.toString)
+        val src = s.readStream.schema(inSchema).parquet(in.toString)
           .withColumn("hr_ts", timestamp_millis(col("hr") * 3600000))
         val deduped = StreamingOps.dedupExactStream(
           src, Seq("user_id", "event_type", "hr"), "hr_ts", "3650 days")

@@ -77,8 +77,9 @@ object StreamingOps {
     tags.map { case (name, pred) => name -> stream.filter(pred) }
 
   /** Streaming ParDo: the full DoFn lifecycle per micro-batch partition
-    * (one micro-batch partition = one bundle — the same contract as the
-    * batch layer; the reference's ParDo machinery is batch/stream-uniform,
+    * (one micro-batch partition = one bundle — the batch layer's contract,
+    * run by the same `graft.core.Runner.bundle`, finalizers and lazy output
+    * included; the reference's ParDo machinery is batch/stream-uniform,
     * translator.py:180-206). Side inputs resolve through the same broadcast
     * [[graft.core.SideInputView]]s as batch — build the view from a static
     * (or slowly refreshed) PCollection and read it with `ctx.sideInput`
@@ -88,21 +89,8 @@ object StreamingOps {
   def parDoStream[I, O](stream: Dataset[I], fn: DoFn[I, O])(
       implicit oe: Encoder[O]): Dataset[O] =
     stream.mapPartitions { it =>
-      fn.setup(); fn.startBundle()
-      val ctx = new BufferingContext[O](0L, Seq(GlobalWindow))
-      val out = mutable.ArrayBuffer.empty[O]
-      try {
-        it.foreach { e =>
-          ctx.buf.clear()
-          fn.process(e, ctx)
-          if (ctx.taggedBuf.nonEmpty)
-            throw new IllegalStateException(
-              "DoFn emitted tagged output from parDoStream — use parDoTaggedStream")
-          ctx.buf.foreach(o => out += o.value.asInstanceOf[O])
-        }
-        fn.finishBundle(o => out += o)
-      } finally fn.teardown() // best-effort teardown even when process throws
-      out.iterator
+      Runner.bundle(fn, it.map(WindowedValue.of(_)), Runner.NoTags)
+        .map(_._2.value.asInstanceOf[O])
     }
 
   /** Streaming ParDo with WINDOWED side inputs — the streaming twin of the
@@ -126,26 +114,11 @@ object StreamingOps {
       stream: Dataset[(I, java.sql.Timestamp)], fn: DoFn[I, O],
       windowFn: WindowFn)(implicit oe: Encoder[O]): Dataset[O] =
     stream.mapPartitions { it =>
-      fn.setup(); fn.startBundle()
-      val ctx = new BufferingContext[O](0L, Seq(GlobalWindow))
-      val out = mutable.ArrayBuffer.empty[O]
-      try {
-        it.foreach { case (e, ts) =>
-          val tms = ts.getTime
-          windowFn.assign(tms).foreach { w =>
-            ctx.currentTs = tms
-            ctx.currentWindows = Seq(w)
-            ctx.buf.clear()
-            fn.process(e, ctx)
-            if (ctx.taggedBuf.nonEmpty)
-              throw new IllegalStateException(
-                "DoFn emitted tagged output from parDoStreamWindowed — use parDoTaggedStream")
-            ctx.buf.foreach(o => out += o.value.asInstanceOf[O])
-          }
-        }
-        fn.finishBundle(o => out += o)
-      } finally fn.teardown()
-      out.iterator
+      val in = it.map { case (e, ts) =>
+        val tms = ts.getTime
+        WindowedValue(e, tms, windowFn.assign(tms))
+      }
+      Runner.bundle(fn, in, Runner.NoTags).map(_._2.value.asInstanceOf[O])
     }
 
   /** Streaming multi-output ParDo: one pass emits `(tag, value)` (main
@@ -163,19 +136,8 @@ object StreamingOps {
     implicit val enc: Encoder[(String, Any)] =
       Encoders.tuple(Encoders.STRING, Encoders.kryo(classOf[Any]))
     stream.mapPartitions { it =>
-      fn.setup(); fn.startBundle()
-      val ctx = new BufferingContext[O](0L, Seq(GlobalWindow))
-      val out = mutable.ArrayBuffer.empty[(String, Any)]
-      try {
-        it.foreach { e =>
-          ctx.buf.clear(); ctx.taggedBuf.clear()
-          fn.process(e, ctx)
-          ctx.buf.foreach(o => out += (("", o.value)))
-          ctx.taggedBuf.foreach { case (tag, wv) => out += ((tag, wv.value)) }
-        }
-        fn.finishBundle(o => out += (("", o)))
-      } finally fn.teardown()
-      out.iterator
+      Runner.bundle(fn, it.map(WindowedValue.of(_)), None)
+        .map { case (tag, wv) => (tag, wv.value) }
     }
   }
 
@@ -376,18 +338,8 @@ object StreamingOps {
       // or Spark drops the metadata and rejects EventTimeTimeout)
       input: Dataset[(K, V, java.sql.Timestamp)],
       fn: StatefulDoFn[K, V, O])(
-      implicit ko: Encoder[K], oo: Encoder[O]): Dataset[O] = {
-    implicit val stateEnc: Encoder[StreamState] =
-      Encoders.kryo(classOf[StreamState])
-    input
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[StreamState, O](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: K, rows: Iterator[(K, V, java.sql.Timestamp)], state: GroupState[StreamState]) =>
-          runStreamingGroup(key, rows.map(r => (r._1, r._2, r._3.getTime)), state, fn)
-            .map(_._1)
-      }
-  }
+      implicit ko: Encoder[K], oo: Encoder[O]): Dataset[O] =
+    sweepGroups(input, fn, enforceHold = false)(_._1)((o, _) => o)
 
   /** [[statefulParDo]] that KEEPS each output's event time — the watermark-
     * hold discipline for timer re-fire chains (reference holds the output
@@ -415,19 +367,13 @@ object StreamingOps {
       input: Dataset[(K, V, java.sql.Timestamp)],
       fn: StatefulDoFn[K, V, O])(
       implicit ko: Encoder[K],
-      oo: Encoder[(O, java.sql.Timestamp)]): Dataset[(O, java.sql.Timestamp)] = {
-    implicit val stateEnc: Encoder[StreamState] =
-      Encoders.kryo(classOf[StreamState])
-    input
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[StreamState, (O, java.sql.Timestamp)](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: K, rows: Iterator[(K, V, java.sql.Timestamp)], state: GroupState[StreamState]) =>
-          runStreamingGroup(key, rows.map(r => (r._1, r._2, r._3.getTime)), state, fn,
-            enforceHold = true)
-            .map { case (o, ts) => (o, new java.sql.Timestamp(ts)) }
-      }
-  }
+      oo: Encoder[(O, java.sql.Timestamp)]): Dataset[(O, java.sql.Timestamp)] =
+    // the timestamp-discarding variants keep their lenient pre-hold
+    // behavior — a DoFn that re-stamps buffered elements with their
+    // ORIGINAL (pre-timer) times was legal there and stays legal, since the
+    // timestamp never leaves the runner
+    sweepGroups(input, fn, enforceHold = true)(_._1)(
+      (o, ts) => (o, new java.sql.Timestamp(ts)))
 
   /** Windowed streaming stateful ParDo: state/timers partitioned per
     * (key, fixed window) — the streaming counterpart of the batch
@@ -439,21 +385,11 @@ object StreamingOps {
       input: Dataset[(K, V, java.sql.Timestamp)],
       windowSizeMillis: Long,
       fn: StatefulDoFn[(K, Long), V, O])(
-      implicit ko: Encoder[(K, Long)], oo: Encoder[O]): Dataset[O] = {
-    implicit val stateEnc: Encoder[StreamState] = Encoders.kryo(classOf[StreamState])
-    input
-      .groupByKey { r =>
-        val ts = r._3.getTime
-        (r._1, ts - java.lang.Math.floorMod(ts, windowSizeMillis))
-      }
-      .flatMapGroupsWithState[StreamState, O](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (K, Long), rows: Iterator[(K, V, java.sql.Timestamp)],
-         state: GroupState[StreamState]) =>
-          runStreamingGroup(key, rows.map(r => (key, r._2, r._3.getTime)), state, fn)
-            .map(_._1)
-      }
-  }
+      implicit ko: Encoder[(K, Long)], oo: Encoder[O]): Dataset[O] =
+    sweepGroups(input, fn, enforceHold = false) { r =>
+      val ts = r._3.getTime
+      (r._1, ts - java.lang.Math.floorMod(ts, windowSizeMillis))
+    }((o, _) => o)
 
   /** Kryo-persisted state: raw cell values + timer heap. */
   final class StreamState extends Serializable {
@@ -461,79 +397,43 @@ object StreamingOps {
     val timers: mutable.Map[(String, String), Long] = mutable.Map.empty
   }
 
-  private def runStreamingGroup[K, V, O](
-      key: K, rows: Iterator[(K, V, Long)], state: GroupState[StreamState],
-      fn: StatefulDoFn[K, V, O],
-      // the timestamped variant enforces forward-only emission (Beam's
-      // zero-allowed-skew default); the timestamp-discarding variants keep
-      // their lenient pre-hold behavior — a DoFn that re-stamps buffered
-      // elements with their ORIGINAL (pre-timer) times was legal there and
-      // must stay legal, since the timestamp never leaves the runner
-      enforceHold: Boolean = false): Iterator[(O, Long)] = {
-    val st = state.getOption.getOrElse(new StreamState)
-    val cells = new StateCells
-    cells.cells ++= st.cells
-    cells.timers ++= st.timers
-    val out = mutable.ArrayBuffer.empty[(O, Long)]
-    val theKey: Any = key
-    val ctx = new StatefulContext[O] {
-      var curTs: Long = 0L
-      def key: Any = theKey
-      def window: BoundedWindow = GlobalWindow
-      def timestamp: Long = curTs
-      // curTs IS the hold: the element's event time during process, the
-      // timer's fire time during onTimer (set before each callback below)
-      def output(o: O): Unit = out += ((o, curTs))
-      def outputWithTimestamp(o: O, ts: Long): Unit = {
-        if (enforceHold) require(ts >= curTs,
-          s"output timestamp $ts is before the hold $curTs — a timestamped " +
-            "streaming stateful ParDo may only move timestamps FORWARD " +
-            "(Beam's zero-allowed-skew default; backward emission " +
-            "fabricates already-late data)")
-        out += ((o, ts))
+  /** `flatMapGroupsWithState` over `Runner.sweep`, the batch stateful
+    * ParDo's sweep: each call restores the group's cells and timers, sweeps
+    * the micro-batch's rows (none on a timeout call) with the group's
+    * watermark as both input and firing watermark, then persists what is
+    * left. Spark delivers late rows to `flatMapGroupsWithState` regardless;
+    * the input watermark drops them (Beam late-data semantics, reference
+    * watermark manager execution.py:374-390). An empty group leaves the
+    * store; otherwise the single Spark timeout is set to the earliest
+    * pending timer.
+    */
+  private def sweepGroups[K, V, G, O, R](
+      input: Dataset[(K, V, java.sql.Timestamp)], fn: StatefulDoFn[G, V, O],
+      enforceHold: Boolean)(groupKey: ((K, V, java.sql.Timestamp)) => G)(
+      emit: (O, Long) => R)(implicit ge: Encoder[G], re: Encoder[R]): Dataset[R] = {
+    implicit val stateEnc: Encoder[StreamState] = Encoders.kryo(classOf[StreamState])
+    input
+      .groupByKey(groupKey)
+      .flatMapGroupsWithState[StreamState, R](
+        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+        (key: G, rows: Iterator[(K, V, java.sql.Timestamp)], state: GroupState[StreamState]) =>
+          val cells = new StateCells
+          state.getOption.foreach { st => cells.cells ++= st.cells; cells.timers ++= st.timers }
+          val wm = state.getCurrentWatermarkMs()
+          val in = if (state.hasTimedOut) Iterator.empty else rows.map(r => (r._2, r._3.getTime))
+          val out = Runner.sweep(fn, key, GlobalWindow, in, cells, wm, wm, enforceHold)
+          if (cells.cells.isEmpty && cells.timers.isEmpty) {
+            if (state.exists) state.remove()
+          } else {
+            val st = new StreamState
+            st.cells ++= cells.cells
+            st.timers ++= cells.timers
+            state.update(st)
+            // single Spark timeout = min pending Beam timer (must be > watermark)
+            if (st.timers.nonEmpty) state.setTimeoutTimestamp(math.max(st.timers.values.min, wm + 1))
+          }
+          out.map { case (o, ts) => emit(o, ts) }
       }
-      def bag[T](spec: BagStateSpec[T]): BagState[T] = cells.bag(spec)
-      def value[T](spec: ValueStateSpec[T]): ValueState[T] = cells.value(spec)
-      def combining[I, A, OO](spec: CombiningStateSpec[I, A, OO]): CombiningState[I, OO] =
-        cells.combining(spec)
-      def timer(spec: TimerSpec): Timer = cells.timer(spec)
-    }
-    if (!state.hasTimedOut) {
-      // Beam late-data semantics (reference watermark manager,
-      // execution.py:374-390): elements strictly BEFORE the current
-      // watermark are late beyond allowed lateness and are dropped; an
-      // element AT the watermark is still on time. (Spark delivers late
-      // rows to flatMapGroupsWithState regardless.)
-      val wmIn = state.getCurrentWatermarkMs()
-      rows.toVector.filter(_._3 >= wmIn).sortBy(_._3).foreach { case (_, v, ts) =>
-        ctx.curTs = ts
-        fn.process(key, v, ctx)
-      }
-    }
-    // fire timers the watermark has passed (event-time only)
-    val wm = state.getCurrentWatermarkMs()
-    var pending = cells.timers.filter(_._2 <= wm)
-    while (pending.nonEmpty) {
-      val ((name, tag), ts) = pending.minBy { case ((n, t), ts0) => (ts0, n, t) }
-      cells.timers.remove((name, tag))
-      ctx.curTs = ts
-      fn.onTimer(key, TimerSpec(name), tag, ts, ctx)
-      pending = cells.timers.filter(_._2 <= wm)
-    }
-    val newState = new StreamState
-    newState.cells ++= cells.cells
-    newState.timers ++= cells.timers
-    if (newState.cells.isEmpty && newState.timers.isEmpty) {
-      if (state.exists) state.remove()
-    } else {
-      state.update(newState)
-      if (newState.timers.nonEmpty) {
-        // single Spark timeout = min pending Beam timer (must be > watermark)
-        val next = math.max(newState.timers.values.min, wm + 1)
-        state.setTimeoutTimestamp(next)
-      }
-    }
-    out.iterator
   }
 
   /** Order-sensitive streaming EWMA: the streaming twin of

@@ -195,6 +195,17 @@ class FeaturesSpec extends SparkTestBase {
     assert(leaked.isEmpty,
       s"bpeTrain leaked persisted RDD blocks (ids $leaked): the per-round " +
         "release is not freeing the localCheckpoint RDDs")
+    // the same release serves the label-propagation loop (forced past the
+    // driver-side union-find) and d128's signature checkpoint; the
+    // components frame handed back is the caller's to release
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id1", "id2")
+    val components = operators.Dedup.connectedComponents(pairs, maxDriverEdges = 0L)
+    assert(components.count() == 5L)
+    operators.GraphOps.releaseCheckpoint(components)
+    ModelChecks.d128CheckSimhashComplete(s, "/root/testdata/sf0.001").collect()
+    val leakedAll = s.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(leakedAll.isEmpty,
+      s"connectedComponents or d128 leaked persisted RDD blocks (ids $leakedAll)")
   }
 
   test("woeIv matches the rank model: exact bins, smoothing, tie routing") {

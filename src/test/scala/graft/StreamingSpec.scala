@@ -19,6 +19,10 @@ object StreamingSpecFixtures {
       def extractOutput(a: (Double, Long)): (Double, Long) = a
     })
   val flushSpec: TimerSpec = TimerSpec("flush")
+  /** Finalization callbacks fired by the streaming ParDo test (executors
+    * share the test JVM in local mode).
+    */
+  val finalized = new java.util.concurrent.atomic.AtomicLong(0)
 }
 
 class StreamingSpec extends SparkTestBase {
@@ -335,6 +339,45 @@ class StreamingSpec extends SparkTestBase {
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     q.stop()
     assertMultiset(rows, Seq(("eur", 110.00000000000001), ("gbp", 13.0), ("jpy", 0.0)))
+  }
+
+  test("streaming ParDo bundle finalization fires after commit, exceptions swallowed") {
+    val s = spark
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val mem = MemoryStream[Int]
+    // one finalizer per bundle; the bundle holding element 1 registers one
+    // that throws after counting
+    val fn = new DoFn[Int, Int] {
+      private var registered = false
+      override def startBundle(): Unit = registered = false
+      def process(e: Int, ctx: ProcessContext[Int]): Unit = {
+        if (!registered) {
+          registered = true
+          val throws = e == 1
+          ctx.registerFinalization { () =>
+            finalized.incrementAndGet()
+            if (throws) throw new RuntimeException("swallowed")
+          }
+        }
+        ctx.output(e)
+      }
+    }
+    finalized.set(0)
+    val q = StreamingOps.parDoStream(mem.toDS(), fn).toDF("v").writeStream
+      .format("memory").queryName("fin_" + System.nanoTime()).outputMode("append").start()
+    mem.addData(1, 2, 3)
+    q.processAllAvailable()
+    mem.addData(4, 5)
+    q.processAllAvailable()
+    val rows = s.sql(s"SELECT v FROM ${q.name}").collect().map(_.getInt(0)).toSeq
+    val failure = q.exception
+    val active = q.isActive
+    q.stop()
+    assert(failure.isEmpty && active, s"the throwing finalizer failed the query: $failure")
+    assertMultiset(rows, Seq(1, 2, 3, 4, 5))
+    // two micro-batches, each with at least one non-empty bundle
+    assert(finalized.get() >= 2L, s"finalizers fired ${finalized.get()} times")
   }
 
   test("streaming ParDo with WINDOWED side input: lookups resolve per main window") {
