@@ -3,7 +3,8 @@ package graft
 /** Benchmark main: runs the query battery on SPARK_GRAFT_SF_DIR and writes
   * per-row wall seconds to [[summaryFile]] and, with every execution's
   * wall, own-process CPU, GC and JIT time, to [[fullFile]]. Both names
-  * carry the core count, so runs at different `cpus` keep their own files.
+  * carry the core count, so runs at different `cpus` keep their own files;
+  * the summary is also copied to [[latestSummaryFile]].
   *
   * Repetition is hybrid: pass 1 runs each row [[repsPerQuery]] times back
   * to back (the warm pair: the second execution runs against loaded
@@ -25,6 +26,10 @@ object Bench {
   val repsPerQuery = 2
 
   def summaryFile(cpus: Int): String = s"bench_summary_c$cpus.json"
+  /** The summary's unsuffixed copy, for readers that predate the core
+    * count in the name; the last run at any `cpus` overwrites it.
+    */
+  val latestSummaryFile = "bench_summary.json"
   def fullFile(cpus: Int): String = s"bench_out_c$cpus.json"
 
   /** One successful execution: wall and own-process CPU seconds, GC and
@@ -159,6 +164,7 @@ object Bench {
       }
     write(fullFile(cpus), r.full)
     write(summaryFile(cpus), r.summary)
+    write(latestSummaryFile, r.summary)
     println(r.short)
     ModelChecks.clearSharedDerivations() // drain pinned check blocks
     spark.stop()

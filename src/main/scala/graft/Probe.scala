@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
@@ -80,8 +81,8 @@ object Probe {
         val t0 = System.nanoTime()
         fn(spark, sfDir).queryExecution.toRdd.foreach(_ => rows.add(1L))
         val wall = (System.nanoTime() - t0) / 1e9
-        // listener bus is async — give it a beat before reading counters
-        Thread.sleep(300)
+        // listener bus is async — deliver every event before reading counters
+        ListenerBusBridge.drain(spark.sparkContext)
         println(f"[probe] $name%-32s rep$rep wall=$wall%7.3f rows=${rows.value}%8d " +
           f"jobs=${jobs.get}%3d stages=${stages.get}%3d tasks=${tasks.get}%5d " +
           f"taskSec=${taskRunMs.get / 1e3}%8.2f cpuSec=${taskCpuNs.get / 1e9}%8.2f " +

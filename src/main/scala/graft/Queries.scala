@@ -1749,9 +1749,11 @@ object Queries {
     * prefix the sampling gates use), and the oracle re-derives depth
     * with a WITH RECURSIVE walk: the battery's only recursive-CTE
     * oracle. Random-parent trees have O(log n) depth (probed 15/18/21
-    * at the three SFs), so the engine converges in ~5 doubling rounds
-    * where a parent-at-a-time walk would take 21 — and at 100 TB a
-    * depth-1000 chain would cost 10 rounds, not 1000.
+    * at the three SFs). A forest under treeDepths' broadcast-sized cap
+    * (every customer table up to sf1 at the default threshold) is walked
+    * on the driver after one collect; past it the doubling loop
+    * converges in ~5 rounds where a parent-at-a-time walk would take 21
+    * — and at 100 TB a depth-1000 chain would cost 10 rounds, not 1000.
     */
   /** ONE definition of the synthetic referral forest — batch d204
     * (depths) and d227 (BOM products) must walk the identical edges (the

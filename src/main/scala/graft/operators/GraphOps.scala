@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StructField, StructType}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Graph analytics over relational co-occurrence graphs — link structure is
   * a standard quality signal in large-scale corpus curation (domain graphs,
@@ -555,60 +560,166 @@ object GraphOps {
           .as("score"))
   }
 
-  /** Exact depth of every node in a rooted forest, by path doubling.
+  /** Exact depth of every node in a rooted forest.
     *
     * Input: one row per node — (node, parent), parent NULL for roots.
     * Parent pointers must be acyclic (every chain reaches a root): a
-    * cycle never converges and fails loudly at maxRounds, and a dangling
-    * parent (pointing at a key with no node row) is caught by an explicit
-    * post-loop audit (it would otherwise masquerade as a root). Output:
-    * (node, depth) with depth 0 for roots — the hierarchy-flattening
-    * primitive (org charts, BOM levels, category trees).
+    * cycle fails loudly with the maxRounds error, and a dangling parent
+    * (pointing at a key with no node row) fails loudly too instead of
+    * masquerading as a root. Output: (node, depth) with depth 0 for
+    * roots — the hierarchy-flattening primitive (org charts, BOM levels,
+    * category trees).
     *
-    * Each round composes the ancestor map with itself: anc ← anc(anc),
+    * Hybrid, like [[Dedup.connectedComponents]] (see [[pointerJumpFold]]):
+    * a forest of at most `spark.sql.autoBroadcastJoinThreshold` / 24 rows
+    * (three longs a row) is walked on the driver after one bounded
+    * collect; a larger one runs the path-doubling loop, where each round
+    * composes the ancestor map with itself: anc ← anc(anc),
     * dist ← dist + dist(anc). The known-ancestor distance DOUBLES per
-    * round, so a depth-D forest converges in ceil(log2(D)) doubling
-    * rounds plus one fixpoint-confirmation round of one keyed self-join
-    * each — never the D sequential one-level joins of the naive parent
-    * walk (at 100 TB a depth-1000 hierarchy is ~11 shuffles, not 1000).
-    * localCheckpoint after each round keeps the plan one round deep
-    * (same hygiene as [[connectedComponents]]); the per-round `active`
-    * probe rides the checkpoint materialization itself (observe), so a
-    * round costs exactly one action.
+    * round, so a depth-D forest converges in ceil(log2(D)) rounds plus
+    * one fixpoint confirmation of one keyed self-join each — never the D
+    * sequential one-level joins of the naive parent walk (at 100 TB a
+    * depth-1000 hierarchy is ~11 shuffles, not 1000). Both paths give the
+    * same depths and bound depth at 2^(maxRounds−1). Setting the
+    * threshold to -1 forces the loop.
     *
     * Reference analogue: the reference's transform graph is flattened
-    * one level at a time on the driver (translator.py); this is the
-    * distributed, logarithmic-round restatement of that walk.
+    * one level at a time on the driver (translator.py); the driver path
+    * is that walk, the loop its distributed, logarithmic-round
+    * restatement.
     */
   def treeDepths(parents: DataFrame, maxRounds: Int = 40): DataFrame =
-    pointerJumpFold(parents.select(col("node"), col("parent")),
-      edgeAcc = lit(1L), rootAcc = 0L, hopIdentity = 0L,
-      combine = _ + _, outCol = "depth", what = "treeDepths",
-      maxRounds = maxRounds)
+    pointerJumpFold(parents.select(col("node"), col("parent")), lit(1L),
+      Depth, maxRounds)
 
-  /** ONE pointer-jumping doubling loop for [[treeDepths]] (+) and
-    * [[treePathProducts]] (×): each round anc ← anc(anc) and
-    * acc ← combine(acc, acc(anc)), so a depth-D forest settles in
-    * ceil(log2(D)) rounds plus one fixpoint confirmation. Shared so the
-    * convergence require, the dangling-parent audit, and their failure
-    * modes cannot drift between the additive and multiplicative twins.
-    *
-    * Failure modes on bad input: a cycle whose accumulated values stay
-    * bounded (+, or × with all-1 weights) trips the maxRounds
-    * convergence require; a cycle with weights ≥ 2 under × SQUARES its
-    * product every round and trips the ANSI Long-overflow error around
-    * round 6 — before any realistic maxRounds, but still loud. Either
-    * way the job dies with a diagnostic instead of returning wrapped or
-    * truncated values.
+  /** What [[pointerJumpFold]] folds along each path to a root: the
+    * Column combine of the doubling loop and the exact Long combine of
+    * the driver walk, defined together so the two paths cannot drift.
+    * `identity` is a root's value and what a hop past a root adds.
     */
-  private def pointerJumpFold(parents: DataFrame, edgeAcc: Column,
-      rootAcc: Long, hopIdentity: Long,
-      combine: (Column, Column) => Column, outCol: String, what: String,
-      maxRounds: Int): DataFrame = {
+  private final case class PathFold(name: String, outCol: String,
+      identity: Long, combine: (Column, Column) => Column,
+      exact: (Long, Long) => Long) {
+    def notConverged(maxRounds: Int): String =
+      s"$name did not converge within $maxRounds rounds — the input " +
+        "has a cycle or depth > 2^" + (maxRounds - 1)
+    def dangling: String =
+      s"$name input has a dangling parent: some chain ends at a key " +
+        "with no (node, parent) row — results would be silently wrong"
+  }
+
+  private val Depth =
+    PathFold("treeDepths", "depth", 0L, _ + _, Math.addExact(_, _))
+  private val Product =
+    PathFold("treePathProducts", "eff_qty", 1L, _ * _, Math.multiplyExact(_, _))
+
+  /** ONE pointer-jumping fold for [[treeDepths]] (+) and
+    * [[treePathProducts]] (×), on one of two paths chosen by input size.
+    *
+    * One bounded `limit(cap + 1).collect()` of (node, parent, edge value)
+    * decides the path and feeds the driver walk, as in
+    * [[Dedup.connectedComponents]]. cap = `autoBroadcastJoinThreshold` /
+    * 24 rows, Spark's own "small enough to ship whole" rule at three
+    * longs a row, so no parameter is added. At or under cap, a memoised
+    * walk visits each node once and returns a local frame. A threshold
+    * ≤ 0 and a node or parent key that is not integral take the loop
+    * without a collect; a NULL or repeated node key and a NULL edge value
+    * below a root take it after the collect, so such input keeps the
+    * loop's answer.
+    *
+    * The loop: each round anc ← anc(anc) and acc ← combine(acc,
+    * acc(anc)), so a depth-D forest settles in ceil(log2(D)) rounds plus
+    * one fixpoint confirmation, one eager checkpoint a round. Round k−1's
+    * checkpoint is released once round k lands; the returned frame sits
+    * on the input's checkpoint and the last round's, which the caller may
+    * free with [[releaseCheckpoint]].
+    *
+    * Both paths fail alike: depth beyond 2^(maxRounds−1) hops and cycles
+    * raise the "did not converge" IllegalArgumentException (the walk
+    * counts each node's hops and finds a cycle in O(n)), a dangling
+    * parent raises the "dangling parent" one, and Long overflow raises an
+    * ArithmeticException (ANSI's SparkArithmeticException on the loop,
+    * Math.addExact/multiplyExact on the walk) — never a wrapped value.
+    * Two differences under ×: a cycle with a weight ≥ 2 squares its
+    * product every round, so the loop overflows (around round 6) where
+    * the walk names the cycle; and the loop multiplies path segments,
+    * the walk suffixes ending at the root, so with a zero weight on a
+    * path the loop can overflow on a segment the walk never forms.
+    */
+  private def pointerJumpFold(parents: DataFrame, edge: Column,
+      fold: PathFold, maxRounds: Int): DataFrame = {
     require(maxRounds >= 1, s"maxRounds must be positive: $maxRounds")
+    foldOnDriver(parents, edge, fold, maxRounds)
+      .getOrElse(foldByDoubling(parents, edge, fold, maxRounds))
+  }
+
+  /** The driver path of [[pointerJumpFold]], or None when the input must
+    * take the loop.
+    */
+  private def foldOnDriver(parents: DataFrame, edge: Column,
+      fold: PathFold, maxRounds: Int): Option[DataFrame] = {
+    val threshold =
+      parents.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val integral = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+    if (threshold <= 0 ||
+        !Seq("node", "parent").forall(c => integral(parents.schema(c).dataType)))
+      return None
+    val cap = math.min(threshold / 24, Int.MaxValue - 1L).toInt
+    val rows = parents.select(col("node"), col("parent"),
+        when(col("parent").isNotNull, edge)).limit(cap + 1).collect()
+    val n = rows.length
+    if (n > cap) return None
+    def key(r: Row, i: Int): Long = r.get(i).asInstanceOf[Number].longValue
+    val at = new mutable.LongMap[Int](n)
+    rows.indices.foreach(i => if (!rows(i).isNullAt(0)) at(key(rows(i), 0)) = i)
+    // a NULL edge value below a root: the loop drops whichever doubled
+    // segment a hop lands on, an answer only the loop gives
+    if (at.size != n ||
+        rows.exists(r => !r.isNullAt(1) && r.isNullAt(2))) return None
+    // the parent's row; -1 for a root, -2 for a key with no node row
+    val up = rows.map(r =>
+      if (r.isNullAt(1)) -1 else at.getOrElse(key(r, 1), -2))
+    // hops(i) is -1 until row i is reached and -2 while it is on the
+    // current walk; then the hop count to its root or dangling key.
+    // carry(i) folds the edge values from i up to the root.
+    val hops = Array.fill(n)(-1L)
+    val carry = new Array[Long](n)
+    val walk = new Array[Int](n)
+    rows.indices.foreach { start =>
+      var len = 0
+      var v = start
+      while (v >= 0 && hops(v) == -1L) {
+        hops(v) = -2L; walk(len) = v; len += 1; v = up(v)
+      }
+      require(v < 0 || hops(v) >= 0, fold.notConverged(maxRounds)) // a cycle
+      while (len > 0) {
+        len -= 1
+        val u = walk(len)
+        up(u) match {
+          case -1 => hops(u) = 0L; carry(u) = fold.identity
+          case -2 => hops(u) = 1L; carry(u) = rows(u).getLong(2)
+          case p =>
+            hops(u) = hops(p) + 1
+            carry(u) = fold.exact(rows(u).getLong(2), carry(p))
+        }
+      }
+    }
+    // R rounds of the loop settle ≤ 2^(R−1) hops
+    val deepest = hops.foldLeft(0L)(math.max)
+    require(maxRounds > 62 || deepest <= (1L << (maxRounds - 1)),
+      fold.notConverged(maxRounds))
+    require(!up.contains(-2), fold.dangling)
+    val out = rows.indices.map(i => Row(rows(i).get(0), carry(i)))
+    Some(parents.sparkSession.createDataFrame(out.asJava, StructType(Seq(
+      parents.schema("node"), StructField(fold.outCol, LongType)))))
+  }
+
+  /** The distributed path of [[pointerJumpFold]]. */
+  private def foldByDoubling(parents: DataFrame, edge: Column,
+      fold: PathFold, maxRounds: Int): DataFrame = {
     val p = parents.localCheckpoint()
     val roots = p.filter(col("parent").isNull)
-      .select(col("node"), lit(rootAcc).as(outCol))
+      .select(col("node"), lit(fold.identity).as(fold.outCol))
     // r10 (guide §1.2 job floor): both `active` probes ride their frame's
     // checkpoint materialization via observe ([[checkpointWithProbe]])
     // instead of a separate limit(1) job per round — one action per
@@ -618,7 +729,7 @@ object GraphOps {
     // anc column is a root and acc is the settled path fold.
     val (f0, m0) = checkpointWithProbe(
       p.filter(col("parent").isNotNull)
-        .select(col("node"), col("parent").as("anc"), edgeAcc.as("acc")),
+        .select(col("node"), col("parent").as("anc"), edge.as("acc")),
       count(lit(1)).as("active"))
     var f = f0
     var active = m0("active").asInstanceOf[Long]
@@ -630,20 +741,19 @@ object GraphOps {
         f.join(hop, Seq("anc"), "left")
           .select(col("node"),
             coalesce(col("anc2"), col("anc")).as("anc"),
-            combine(col("acc"), coalesce(col("a2"), lit(hopIdentity)))
+            fold.combine(col("acc"), coalesce(col("a2"), lit(fold.identity)))
               .as("acc"),
             col("anc2").isNotNull.as("__moved")),
         sum(when(col("__moved"), 1L).otherwise(0L)).as("active"))
       active = Option(m("active").asInstanceOf[java.lang.Long])
         .fold(0L)(_.longValue) // SUM over zero rows is NULL
+      releaseCheckpoint(f) // round k−1's blocks are dead once round k lands
       f = next.drop("__moved")
       round += 1
     }
     // R rounds settle depth ≤ 2^(R−1): the last round is the fixpoint
     // confirmation in which nothing moves (depth 9 needs 4 + 1 rounds)
-    require(active == 0,
-      s"$what did not converge within $maxRounds rounds — the input " +
-        "has a cycle or depth > 2^" + (maxRounds - 1))
+    require(active == 0, fold.notConverged(maxRounds))
     // dangling-parent audit: every settled ancestor must be a real root
     // row, else the chain silently terminated at a key with no node. A
     // plain count, not limit(1): on valid input there is no row to stop
@@ -653,34 +763,31 @@ object GraphOps {
     val dangling = f.join(
       roots.select(col("node").as("anc")), Seq("anc"), "left_anti")
       .count()
-    require(dangling == 0,
-      s"$what input has a dangling parent: some chain ends at a key " +
-        "with no (node, parent) row — results would be silently wrong")
-    roots.unionByName(f.select(col("node"), col("acc").as(outCol)))
+    require(dangling == 0, fold.dangling)
+    roots.unionByName(f.select(col("node"), col("acc").as(fold.outCol)))
   }
 
   /** Weighted path PRODUCTS over a forest — the BOM-explosion primitive
     * (effective quantity of a component = Π of per-edge quantities up to
-    * the root), by the same pointer-jumping doubling as [[treeDepths]]
-    * with + replaced by ×: each round, `prod(v) ·= prod(anc(v))` and
+    * the root), by the same hybrid as [[treeDepths]] with + replaced by
+    * ×: on the loop, each round `prod(v) ·= prod(anc(v))` and
     * `anc(v) ← anc(anc(v))`, so a depth-1000 chain multiplies out in 10
-    * shuffles. Input: (node, parent, qty) with qty the edge weight
-    * node→parent (roots: parent NULL, qty ignored). Output: (node,
-    * eff_qty) — roots at 1.
+    * shuffles; a forest of at most `autoBroadcastJoinThreshold` / 24
+    * rows is multiplied out on the driver after one bounded collect
+    * (threshold -1 forces the loop). Input: (node, parent, qty) with qty
+    * the edge weight node→parent (roots: parent NULL, qty ignored).
+    * Output: (node, eff_qty) — roots at 1.
     *
-    * Exactness: products stay in Long under ANSI mode, which FAILS LOUDLY
-    * on overflow rather than wrapping — callers with qty ≤ q and depth D
-    * need q^D < 2^63 (q=6 → D ≤ 24; deeper BOMs lift to DECIMAL(38,0)).
-    * Dangling parents are rejected as in [[treeDepths]]; cycles die
-    * loudly too, but usually as the ANSI overflow rather than the
-    * maxRounds require — the doubling squares a cycle's product every
-    * round, blowing past 2^63 by round ~6 whenever any cycle edge has
-    * qty ≥ 2 (see [[pointerJumpFold]]).
+    * Exactness: products stay in Long and FAIL LOUDLY on overflow with an
+    * ArithmeticException rather than wrapping — callers with qty ≤ q and
+    * depth D need q^D < 2^63 (q=6 → D ≤ 24; deeper BOMs lift to
+    * DECIMAL(38,0)). Dangling parents are rejected as in [[treeDepths]];
+    * cycles die loudly too — on the loop usually as the overflow rather
+    * than the maxRounds require, since the doubling squares a cycle's
+    * product every round whenever any cycle edge has qty ≥ 2 (see
+    * [[pointerJumpFold]]).
     */
   def treePathProducts(parents: DataFrame, maxRounds: Int = 40): DataFrame =
-    pointerJumpFold(
-      parents.select(col("node"), col("parent"), col("qty")),
-      edgeAcc = col("qty").cast("long"), rootAcc = 1L, hopIdentity = 1L,
-      combine = _ * _, outCol = "eff_qty", what = "treePathProducts",
-      maxRounds = maxRounds)
+    pointerJumpFold(parents.select(col("node"), col("parent"), col("qty")),
+      col("qty").cast("long"), Product, maxRounds)
 }

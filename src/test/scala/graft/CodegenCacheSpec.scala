@@ -35,11 +35,16 @@ class CodegenCacheSpec extends SparkTestBase {
   }
 
   test("treeDepths generates the same code on every call") {
-    // binary heap 1..255: node i hangs under i / 2, depth floor(log2 i)
+    // binary heap 1..255: node i hangs under i / 2, depth floor(log2 i);
+    // the threshold at -1 keeps it on the doubling loop, whose per-round
+    // plans are what must hit the cache (a forest this small would
+    // otherwise be walked on the driver)
     val parents = spark.range(1, 256)
       .selectExpr("id AS node", "IF(id = 1, NULL, id DIV 2) AS parent")
-    def depthSum(): Long = GraphOps.treeDepths(parents)
-      .selectExpr("sum(depth)").collect()(0).getLong(0)
+    def depthSum(): Long = withBroadcastThreshold("-1") {
+      GraphOps.treeDepths(parents)
+        .selectExpr("sum(depth)").collect()(0).getLong(0)
+    }
     val want = (1 to 255).map(i => 31 - Integer.numberOfLeadingZeros(i)).sum
     assert(depthSum() == want)
     val c0 = compiles

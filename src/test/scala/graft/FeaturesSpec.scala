@@ -202,10 +202,24 @@ class FeaturesSpec extends SparkTestBase {
     val components = operators.Dedup.connectedComponents(pairs, maxDriverEdges = 0L)
     assert(components.count() == 5L)
     operators.GraphOps.releaseCheckpoint(components)
+    // the tree loop (forced past the driver walk) frees each superseded
+    // round as the next lands; the two checkpoints under its result (the
+    // input's and the last round's) are the caller's. Counted at once:
+    // the registry holds RDDs weakly, so a GC would hide a leak later on
+    val depths = withBroadcastThreshold("-1") {
+      operators.GraphOps.treeDepths((0L to 6L)
+        .map(v => (v, if (v == 0L) None else Some(v - 1L)))
+        .toDF("node", "parent"))
+    }
+    val held = s.sparkContext.getPersistentRDDs.keySet.diff(before)
+    assert(held.size == 2, s"treeDepths holds checkpoints $held, want 2")
+    assert(depths.count() == 7L)
+    operators.GraphOps.releaseCheckpoint(depths)
     ModelChecks.d128CheckSimhashComplete(s, "/root/testdata/sf0.001").collect()
     val leakedAll = s.sparkContext.getPersistentRDDs.keySet.diff(before)
     assert(leakedAll.isEmpty,
-      s"connectedComponents or d128 leaked persisted RDD blocks (ids $leakedAll)")
+      s"connectedComponents, treeDepths or d128 leaked persisted RDD " +
+        s"blocks (ids $leakedAll)")
   }
 
   test("woeIv matches the rank model: exact bins, smoothing, tie routing") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.GraphOps
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ListenerBusBridge
 
 /** GraphOps: degree-oriented triangle counting vs brute-force triple
   * enumeration, PageRank vs an in-memory replica of the same recurrence,
@@ -300,7 +301,17 @@ class GraphOpsSpec extends SparkTestBase {
     assert(capped.isEmpty) // every 2-path in tri runs through node 1
   }
 
-  test("treeDepths: chain + forest depths exact; doubling beats the walk") {
+  /** Registers `body` twice, once per path of the tree folds: as named
+    * under the default broadcast threshold (the driver walk), and with
+    * the threshold at -1 (the doubling loop). Same inputs, same
+    * expectations, so both paths give equal maps and fail alike.
+    */
+  private def treeTest(name: String)(body: => Unit): Unit = {
+    test(name)(body)
+    test(s"$name [doubling loop]")(withBroadcastThreshold("-1")(body))
+  }
+
+  treeTest("treeDepths: chain + forest depths exact; doubling beats the walk") {
     // chain 0<-1<-2<-...<-9 (depth 9, needs ceil(log2(9)) = 4 doubling
     // rounds) plus a second root 100 with two direct children
     val parents = (Seq((0L, Option.empty[Long]), (100L, None)) ++
@@ -313,15 +324,17 @@ class GraphOpsSpec extends SparkTestBase {
       Map(100L -> 0L, 101L -> 1L, 102L -> 1L)
     assert(got == want)
     // maxRounds exactly at the bound (4 doubling rounds + 1 fixpoint
-    // confirmation) still converges; well below it must fail loudly
-    // (a truncated depth map is WRONG)
+    // confirmation) still converges; one round short (depth 9 > 2^3) or
+    // well below it must fail loudly (a truncated depth map is WRONG)
     assert(GraphOps.treeDepths(parents, maxRounds = 5).count() == 13L)
-    intercept[IllegalArgumentException] {
-      GraphOps.treeDepths(parents, maxRounds = 2).count()
+    Seq(4, 2).foreach { r =>
+      intercept[IllegalArgumentException] {
+        GraphOps.treeDepths(parents, maxRounds = r).count()
+      }
     }
   }
 
-  test("treeDepths: cycle and dangling parent both fail loudly") {
+  treeTest("treeDepths: cycle and dangling parent both fail loudly") {
     val cyc = Seq((0L, Option.empty[Long]), (1L, Some(2L)), (2L, Some(1L)))
       .toDF("node", "parent")
     intercept[IllegalArgumentException] {
@@ -336,7 +349,7 @@ class GraphOpsSpec extends SparkTestBase {
     }
   }
 
-  test("treePathProducts: chain and forest closed forms") {
+  treeTest("treePathProducts: chain and forest closed forms") {
     // chain 1 <- 2 <- 3 <- 4 with qty(v) = v: eff(4) = 4*3*2 = 24
     val chain = Seq((1L, None, 0L), (2L, Some(1L), 2L), (3L, Some(2L), 3L),
       (4L, Some(3L), 4L)).toDF("node", "parent", "qty")
@@ -351,7 +364,7 @@ class GraphOpsSpec extends SparkTestBase {
     assert(got2 == Map(1L -> 1L, 2L -> 1L, 3L -> 5L, 4L -> 7L))
   }
 
-  test("treePathProducts: deep chain converges in O(log depth) rounds") {
+  treeTest("treePathProducts: deep chain converges in O(log depth) rounds") {
     // depth 64 with qty 1 everywhere (products stay 1, depth stresses
     // the doubling): maxRounds 8 suffices where naive needs 64
     val rows = (1L to 64L).map(v =>
@@ -362,13 +375,95 @@ class GraphOpsSpec extends SparkTestBase {
     assert(got.size == 64 && got.values.forall(_ == 1L))
   }
 
-  test("treePathProducts: cycle and dangling parent fail loudly") {
+  treeTest("treePathProducts: cycle and dangling parent fail loudly") {
     val cyc = Seq((1L, Some(2L), 2L), (2L, Some(1L), 2L))
       .toDF("node", "parent", "qty")
     intercept[Exception] { GraphOps.treePathProducts(cyc, maxRounds = 5).collect() }
     val dangling = Seq((1L, None, 0L), (2L, Some(99L), 3L))
       .toDF("node", "parent", "qty")
     intercept[Exception] { GraphOps.treePathProducts(dangling).collect() }
+    // the loop names a weight-2 cycle as a Long overflow, the walk as a
+    // cycle; with weight 1 the product stays bounded and both must name it
+    // as non-convergence, and the dangling parent the same way on both
+    val cyc1 = Seq((1L, Some(2L), 1L), (2L, Some(1L), 1L))
+      .toDF("node", "parent", "qty")
+    intercept[IllegalArgumentException] {
+      GraphOps.treePathProducts(cyc1, maxRounds = 5).collect()
+    }
+    intercept[IllegalArgumentException] {
+      GraphOps.treePathProducts(dangling).collect()
+    }
+  }
+
+  treeTest("treePathProducts: a product past 2^63 fails, never wraps") {
+    // qty 2 down a 64-node chain: node 64's product is 2^63, one past
+    // Long.MaxValue (node 63's, 2^62, still fits)
+    val rows = (1L to 64L).map(v =>
+      (v, if (v == 1L) None else Some(v - 1L), 2L))
+    val e = intercept[ArithmeticException] {
+      GraphOps.treePathProducts(rows.toDF("node", "parent", "qty")).collect()
+    }
+    assert(e != null)
+    val fits = GraphOps.treePathProducts(
+      rows.take(63).toDF("node", "parent", "qty"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(fits(63L) == 1L << 62)
+  }
+
+  test("tree folds: the driver walk and the doubling loop agree on a random forest") {
+    // parent(v) < v, so acyclic; three roots; INT node keys beside BIGINT
+    // parents
+    val rnd = new scala.util.Random(29)
+    val rows = (0 until 400).map { v =>
+      (v, if (v < 3) None else Some(rnd.nextInt(v).toLong), (v % 3 + 1).toLong)
+    }
+    val df = rows.toDF("node", "parent", "qty")
+    def onBoth[T](f: => T): (T, T) = (f, withBroadcastThreshold("-1")(f))
+    val (walkDepths, loopDepths) = onBoth(GraphOps.treeDepths(df)
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+    val (walkProds, loopProds) = onBoth(GraphOps.treePathProducts(df)
+      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+    assert(walkDepths == loopDepths && walkProds == loopProds)
+    // and both equal the sequential parent walk
+    val byNode = rows.map(r => r._1 -> r).toMap
+    def chain(v: Int): List[Int] =
+      byNode(v)._2.fold(List(v))(p => v :: chain(p.toInt))
+    rows.foreach { case (v, _, _) =>
+      val up = chain(v)
+      assert(walkDepths(v) == up.size - 1L)
+      assert(walkProds(v) == up.init.map(byNode(_)._3).product, s"node $v")
+    }
+    // the output keeps the input's node field and a BIGINT fold column
+    val (walkSchema, loopSchema) = onBoth(GraphOps.treeDepths(df).schema
+      .map(f => f.name -> f.dataType))
+    assert(walkSchema == loopSchema)
+    assert(walkSchema == Seq("node" -> org.apache.spark.sql.types.IntegerType,
+      "depth" -> org.apache.spark.sql.types.LongType))
+  }
+
+  test("treeDepths on a small forest starts exactly one job (the collect)") {
+    // one partition, so the bounded collect is one job; the loop would
+    // start one checkpoint job per doubling round plus the audit
+    val parents = spark.range(1, 256, 1, 1)
+      .selectExpr("id AS node", "IF(id = 1, NULL, id DIV 2) AS parent")
+    val sc = spark.sparkContext
+    ListenerBusBridge.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(l)
+    val depths = try {
+      val d = GraphOps.treeDepths(parents)
+      ListenerBusBridge.drain(sc)
+      d
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get == 1, s"treeDepths started ${jobs.get} jobs")
+    val want = (1 to 255).map(i => 31 - Integer.numberOfLeadingZeros(i)).sum
+    assert(depths.selectExpr("sum(depth)").head().getLong(0) == want)
   }
 
   test("checkpointWithProbe: fused probe matches direct aggregates and adds no jobs") {

@@ -288,14 +288,12 @@ class ScaleOpsSpec extends SparkTestBase {
     // (k, __salt) — a hot key's rows spread over saltFactor reducers.
     // sparkPlan shows the join BEFORE EnsureRequirements inserts the
     // exchanges, so pin the join keys, which the exchanges must satisfy.
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withBroadcastThreshold("-1") {
       val plan = ScaleOps.saltedJoin(left, right, Seq("k"), 4)
         .queryExecution.sparkPlan.toString
       assert("Join \\[k#\\d+L?, __salt".r.findFirstIn(plan).nonEmpty,
         s"expected a join keyed on (k, __salt) in:\n$plan")
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
     // outer flavors that would duplicate unmatched right rows are refused
     intercept[IllegalArgumentException] {
       ScaleOps.saltedJoin(left, right, Seq("k"), 4, "full_outer")
@@ -563,9 +561,7 @@ class ScaleOpsSpec extends SparkTestBase {
       .select(col("l_orderkey").as("k"), col("l_extendedprice"))
     val small = Tables.orders(s, "/root/testdata/sf0.001")
       .filter(col("o_totalprice") > 450000).select(col("o_orderkey").as("k"))
-    val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withBroadcastThreshold("-1") {
       val df = ScaleOps.bloomSemiJoin(big, small, Seq("k"), expectedItems = 8)
       df.queryExecution.toRdd.foreach(_ => ()) // run so AQE finalizes
       val lines = df.queryExecution.executedPlan.toString.linesIterator.toSeq
@@ -577,7 +573,7 @@ class ScaleOpsSpec extends SparkTestBase {
         l.contains("Filter") && l.toLowerCase.contains("bloommightcontain"))
       assert(probeLine > firstExchange,
         s"bloom probe not below the exchange:\n${lines.mkString("\n")}")
-    } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("profileColumns: null census, NATIVE-type min/max, one scan; approx mode drops Expand") {

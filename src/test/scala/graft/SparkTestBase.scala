@@ -25,6 +25,17 @@ trait SparkTestBase extends AnyFunSuite {
     assert(a == e, s"\nactual:   ${actual.sortBy(_.toString)}\nexpected: ${expected.sortBy(_.toString)}")
   }
 
+  /** Runs `body` with the session's `spark.sql.autoBroadcastJoinThreshold`
+    * at `bytes` and restores the previous value after it. At "-1",
+    * GraphOps' tree folds skip the driver walk and take the doubling loop.
+    */
+  def withBroadcastThreshold[T](bytes: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, bytes)
+    try body finally spark.conf.set(key, prev)
+  }
+
   /** Scratch-dir cleanup shared by every spec that writes local files. */
   def deleteRecursively(path: String): Unit = {
     def rec(f: java.io.File): Unit = {
